@@ -13,9 +13,11 @@ import graft.kv.{Entity, Stash}
   * of seed-drawn sizes plus scalar, string and long fields, saved bucketed
   * and reopened; then Zipf-skewed point gets (a few misses included) with
   * one versioned write per `GetsPerWrite` gets. A write upserts a batch
-  * (half updates, half inserts), saves it as the next version and opens
-  * it, the commit pattern of `Streams.streamIntoStash`. Every get is
-  * compared with an in-memory model of the store.
+  * (half updates, half inserts), removes as many live keys as it inserts,
+  * saves the result as the next version and opens it, the commit pattern
+  * of `Streams.streamIntoStash`. The store keeps `Initial` entities, so
+  * its size does not depend on how many writes fit in the run. Every get
+  * is compared with a model of the store: one digest per live key.
   */
 final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
   import spark.implicits._
@@ -27,9 +29,11 @@ final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
   val MissShare = 0.05
   val ZipfS = 1.1
 
-  /** Keys in popularity order (rank 0 hottest) and the current contents. */
+  /** Live keys in popularity order (rank 0 hottest); per live key the
+    * digest of its entity and its raw user bytes.
+    */
   private val keys = mutable.ArrayBuffer.empty[String]
-  private val model = mutable.HashMap.empty[String, Entity]
+  private val model = mutable.HashMap.empty[String, (String, Long)]
   private var cdf: Array[Double] = Array.empty
   private var stash: Stash = _
   private var version = 0L
@@ -64,15 +68,25 @@ final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
       e.longs.keys.map(b(_) + 8L).sum
   }
 
-  private def same(a: Option[Entity], b: Option[Entity]): Boolean = (a, b) match {
-    case (None, None) => true
-    case (Some(x), Some(y)) =>
-      def arrays[T](m1: Map[String, Array[T]], m2: Map[String, Array[T]]) =
-        m1.keySet == m2.keySet && m1.forall { case (k, v) => v.sameElements(m2(k)) }
-      x.key == y.key && x.scalars == y.scalars && x.strings == y.strings &&
-        x.longs == y.longs && arrays(x.tensors, y.tensors) && arrays(x.shapes, y.shapes)
-    case _ => false
+  /** SHA-256 over every field of an entity, in key order, doubles by their
+    * bits.
+    */
+  private def digest(e: Entity): String = {
+    val b = java.nio.ByteBuffer.allocate(8)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def str(s: String): Unit = { md.update(s.getBytes("UTF-8")); md.update(0: Byte) }
+    def long(x: Long): Unit = { b.clear(); b.putLong(x); md.update(b.array()) }
+    def dbl(x: Double): Unit = long(java.lang.Double.doubleToLongBits(x))
+    str(e.key)
+    e.tensors.toSeq.sortBy(_._1).foreach { case (k, v) => str(k); long(v.length); v.foreach(dbl) }
+    e.shapes.toSeq.sortBy(_._1).foreach { case (k, v) => str(k); long(v.length); v.foreach(x => long(x)) }
+    e.scalars.toSeq.sortBy(_._1).foreach { case (k, v) => str(k); dbl(v) }
+    e.strings.toSeq.sortBy(_._1).foreach { case (k, v) => str(k); str(v) }
+    e.longs.toSeq.sortBy(_._1).foreach { case (k, v) => str(k); long(v) }
+    md.digest().map("%02x".format(_)).mkString
   }
+
+  private def remember(e: Entity): Unit = model(e.key) = (digest(e), userBytes(e))
 
   private def path(v: Long) = s"$root/v$v"
 
@@ -97,23 +111,29 @@ final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
     val k = pickKey(round)
     h.op(round, "get", "get") {
       val got = h.span("kv", "Stash.get")(stash.get(k))
-      Answer("Stash.get", got.size.toLong, () => same(got, model.get(k)))
+      Answer("Stash.get", got.size.toLong, () => got.map(digest) == model.get(k).map(_._1))
     }
   }
 
   private def write(round: Int): Unit = {
-    val updates = rng.shuffle(keys.indices.toVector).take(Batch / 2).map(i => entity(keys(i)))
+    val picked = rng.shuffle(keys.toVector).take(Batch)
+    val (updated, removed) = picked.splitAt(Batch / 2)
+    val updates = updated.map(entity)
     val inserts = Vector.fill(Batch - Batch / 2)(entity(newKey()))
     val batch = updates ++ inserts
     val ds = spark.createDataset(batch)
     h.op(round, "write", "write") {
-      val next = h.span("kv", "Stash.addAll")(stash.addAll(ds))
+      val upserted = h.span("kv", "Stash.addAll")(stash.addAll(ds))
+      val next = h.span("kv", "Stash.remove")(removed.foldLeft(upserted)(_.remove(_)))
       h.span("kv", "Stash.save")(next.save(path(version + 1), Buckets))
       stash = h.span("kv", "Stash.open")(Stash.open(spark, path(version + 1)))
       Answer("Stash.addAll+save+open", batch.size.toLong, () => true)
     }
     version += 1
-    batch.foreach(e => model(e.key) = e)
+    batch.foreach(remember)
+    model --= removed
+    val gone = removed.toSet
+    keys.filterInPlace(k => !gone(k))
     keys ++= inserts.map(_.key)
     resetCdf()
     Stash.gcVersions(spark, root, version)
@@ -124,7 +144,7 @@ final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
     val data = Option(new File(path(version)).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
     files += data.count(_.getName.startsWith("part-"))
-    storeRatio += data.map(_.length).sum.toDouble / model.values.map(userBytes).sum
+    storeRatio += data.map(_.length).sum.toDouble / model.values.map(_._2).sum
   }
 
   /** Set-up builds version 0 and runs one warm round; a round is
@@ -143,7 +163,7 @@ final class Kv(spark: SparkSession, h: Harness, root: String, rng: Random) {
     }
     val setup = () => {
       val es = h.setupPart("kv.generate")(Vector.fill(Initial)(entity(newKey())))
-      es.foreach(e => model(e.key) = e)
+      es.foreach(remember)
       keys ++= rng.shuffle(es.map(_.key))
       resetCdf()
       h.setupPart("kv.build") {

@@ -25,7 +25,7 @@ final case class Answer(form: String, rows: Long, check: () => Boolean)
   * points. Writes raw samples as JSON to `--out`; `run.py` turns them into
   * the reported metrics and checks the set-up results against DuckDB.
   *
-  * Args: --workload olap|olap_staged|pipeline|kv --seed N --seconds S
+  * Args: --workload olap|pipeline|kv --seed N --seconds S
   *       --trace 0|1 --data DIR --work DIR --out FILE --cores N
   */
 object Main {
@@ -34,9 +34,13 @@ object Main {
   val OlapQueries: Seq[String] = Exec.registry.keys.toSeq.sortBy(q =>
     (q.filter(_.isDigit).toInt, q))
 
+  /** The shorter LLM-data jobs (about 0.4-1.3 s each): q81's curation
+    * funnel, q48's incremental near-dup ingest (the streaming store write),
+    * q88's ANN search, q90's LR classifier and q83's codec round trip. The
+    * slow q142, q79 and q63 would stretch a round past the run budget.
+    */
   val PipelineQueries: Seq[String] = Seq(
-    "q142_bpe_merges", "q79_source_overlap", "q81_curation_funnel",
-    "q63_canonical_docs", "q48_incremental_neardup", "q88_ann_ivfadc",
+    "q81_curation_funnel", "q48_incremental_neardup", "q88_ann_ivfadc",
     "q90_lr_quality", "q83_codec_roundtrip")
 
   def main(args: Array[String]): Unit = {
@@ -112,15 +116,13 @@ final class Ctx(workload: String, seed: Long, seconds: Double, traceRun: Boolean
     }
 
     val w = workload match {
-      case "olap" | "olap_staged" => olap(workload == "olap_staged")
+      case "olap" => olap()
       case "pipeline" => pipeline()
       case "kv" => new Kv(spark, this, s"$work/kv", rng).workload()
       case w => throw new IllegalArgumentException(s"unknown workload '$w'")
     }
     w.setup()
-    // a second untimed round: after one, the JIT is still visibly cold
-    w.round(0)
-    // ops of the warm rounds are set-up checks, not timed samples
+    // ops of the warm round are set-up checks, not timed samples
     val setupChecks = ops.size
     val setupFailed = ops.count(!_.ok)
     ops.clear()
@@ -145,8 +147,21 @@ final class Ctx(workload: String, seed: Long, seconds: Double, traceRun: Boolean
     tracer.enabled = false
 
     extra("jvm_gc_ms_timed") = gcMs() - gc0
-    System.gc(); System.gc()
-    val mem = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    // Spark frees persisted and checkpointed blocks from its ContextCleaner
+    // thread once a collection has found their RDDs unreachable, so one
+    // collection can still count them; collect until the figure stops
+    // falling
+    def heapAfterGc(): Double = {
+      System.gc()
+      Thread.sleep(300)
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
+    }
+    @annotation.tailrec
+    def settle(prev: Double, tries: Int): Double = {
+      val now = heapAfterGc()
+      if (now < prev * 0.99 && tries < 8) settle(now, tries + 1) else math.min(prev, now)
+    }
+    val mem = settle(heapAfterGc(), 1)
     if (traceRun) w.after()
     spark.stop()
 
@@ -198,36 +213,27 @@ final class Ctx(workload: String, seed: Long, seconds: Double, traceRun: Boolean
     ops += Op(round, name, took, ok, answer.form, answer.rows, traced, opSeq, kind)
   }
 
-  // ---- olap / olap_staged -------------------------------------------------
+  // ---- olap ---------------------------------------------------------------
 
   private def collect(df: DataFrame): Array[Row] =
     tracer.span("collect", "collect")(df.collect())
 
-  private def olap(staged: Boolean): Workload = {
+  private def olap(): Workload = {
     val digests = mutable.Map.empty[String, String]
-    def runQuery(q: String): (String, Array[Row], DataFrame) =
-      if (staged) {
-        val (_, form, df) =
-          tracer.span("exec", "Exec.runFamily")(Exec.runFamily(spark, dir, Seq(q)).head)
-        (form, collect(df), df)
-      } else {
-        val (form, df) = tracer.span("exec", "Exec.runNamed")(Exec.runNamed(spark, dir, q))
-        (form, collect(df), df)
-      }
+    def runQuery(q: String): (String, Array[Row], DataFrame) = {
+      val (form, df) = tracer.span("exec", "Exec.runNamed")(Exec.runNamed(spark, dir, q))
+      (form, collect(df), df)
+    }
 
     val warm = () => {
       timed("tables.probe")(Tables.probeSchemas(spark, dir))
       Tables.names.foreach(t => timed("tables.load") {
         if (t == "events") Tables.events(spark, dir) else Tables.load(spark, dir, t)
       })
-      if (staged) timed("layouts.stage")(Layouts.eventsByUserCached(spark, dir))
       // one untimed warm round; its results are the reference for every
       // later round and are dumped for the DuckDB comparison
       val warmT = System.nanoTime()
-      val results = if (staged) {
-        tracer.span("exec", "Exec.runFamily")(Exec.runFamily(spark, dir, Main.OlapQueries))
-          .map { case (q, form, df) => (q, form, collect(df), df) }
-      } else Main.OlapQueries.map { q =>
+      val results = Main.OlapQueries.map { q =>
         val (form, rows, df) = runQuery(q); (q, form, rows, df)
       }
       setupParts("warm_round") = ms(warmT)
@@ -253,10 +259,10 @@ final class Ctx(workload: String, seed: Long, seconds: Double, traceRun: Boolean
         if (tracer.enabled) timeValidity(q, form)
       }
     }
-    // staged probe of an unstaged traced run: stage the events layout, then
-    // one untimed round through Exec.runFamily, so the traced olap run also
-    // measures graft.Layouts
-    val after = () => if (!staged) {
+    // staged probe of a traced run: stage the events layout, then one
+    // untimed round through Exec.runFamily, so the traced run also measures
+    // graft.Layouts
+    val after = () => {
       timed("layouts.stage")(Layouts.eventsByUserCached(spark, dir))
       val t0 = System.nanoTime()
       val answers = Exec.runFamily(spark, dir, Main.OlapQueries).map { case (q, form, df) =>

@@ -3,17 +3,19 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload olap --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload olap --seed 1 --seconds 10 --trace 0
 
-Workloads: olap, olap_staged, pipeline, kv (see perfbench/METRICS.md).
+Workloads: olap, pipeline, kv (see perfbench/METRICS.md).
 --trace 0 prints the end-to-end metrics; --trace 1 runs the same loop with
 every other round traced and prints the per-layer metrics. The last stdout
 line is one JSON object: {"correct", "attempted", "failed", "metrics"}.
 The exit code is non-zero on any wrong result or failed op.
 
 The first run builds the engine and the harness with sbt (the build is
-reused while the sources are unchanged); inputs are generated from --seed.
-Everything the run writes stays under .perfbench/ in the repository root.
+reused while the sources are unchanged). olap and pipeline read the sf0.1
+tables in perfbench/data/sf0.1 in a round order shuffled by --seed; kv
+generates its entities from --seed. Everything the run writes stays under
+.perfbench/ in the repository root.
 """
 import argparse
 import hashlib
@@ -32,12 +34,12 @@ ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, ".perfbench")
 BUILD = os.path.join(STATE, "build")
 RUN = os.path.join(STATE, "run")
+DATA = os.path.join(HERE, "data", "sf0.1")
 
 sys.path.insert(0, HERE)
-import gen_data  # noqa: E402
 import oracle  # noqa: E402
 
-WORKLOADS = ("olap", "olap_staged", "pipeline", "kv")
+WORKLOADS = ("olap", "pipeline", "kv")
 DEFAULT_SEED = 1
 HELD_OUT_SEED = 7919
 RUN_LIMIT_S = 170
@@ -147,7 +149,7 @@ def run_jvm(classpath, args, deadline):
         "-cp", classpath, "perfbench.Main",
         "--workload", args.workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace),
-        "--cores", str(cores()), "--data", os.path.join(RUN, "data"),
+        "--cores", str(cores()), "--data", DATA,
         "--work", RUN, "--out", out,
     ]
     with open(os.path.join(RUN, "jvm.log"), "w") as logf:
@@ -212,6 +214,21 @@ def round_s(ops, n_rounds):
     return sum(med(xs) * len(xs) / n_rounds for xs in by_name.values()) / 1e3
 
 
+def op_p50(ops):
+    """Median op latency over per-op medians: each op name's median, weighted
+    by how often it runs. Sampling noise in a few runs of one op name does
+    not move it, unlike the median over all samples."""
+    by_name = {}
+    for o in ops:
+        by_name.setdefault(o["name"], []).append(o["ms"])
+    meds = sorted((med(xs), len(xs)) for xs in by_name.values())
+    half, acc = sum(n for _, n in meds) / 2.0, 0
+    for m, n in meds:
+        acc += n
+        if acc >= half:
+            return m
+
+
 def end_to_end(raw, report):
     ops = raw["ops"]
     lat = [o["ms"] for o in ops]
@@ -219,7 +236,7 @@ def end_to_end(raw, report):
     m = {
         "setup_s": (raw["setup_s"], "s"),
         "round_s": (round_s(ops, len(rounds)), "s"),
-        "op_p50_ms": (pct(lat, 50), "ms"),
+        "op_p50_ms": (op_p50(ops), "ms"),
         "retained_heap_mb": (raw["retained_heap_mb"], "MB"),
     }
     report(f"ops {len(lat)} in {len(rounds)} rounds; timed phase {raw['elapsed_s']:.2f} s")
@@ -261,16 +278,6 @@ def duckdb_ratio(raw, con, report):
     return math.exp(sum(math.log(r) for r in ratios) / len(ratios))
 
 
-def staged_share(raw, queries, layout_forms):
-    """Share of queries a staged-layout form answered: the timed ops of
-    olap_staged, or the staged probe round that ends a traced olap run."""
-    if raw["workload"] == "olap_staged":
-        forms = [o["form"] for o in queries]
-    else:
-        forms = raw.get("staged_probe", {}).get("forms", [])
-    return sum(f in layout_forms for f in forms) / len(forms) if forms else 0.0
-
-
 def per_layer(raw, report):
     L = raw["layers"]
     ops = [o for o in raw["ops"] if o["traced"]]
@@ -287,8 +294,13 @@ def per_layer(raw, report):
     slot = [run_ms / (s * 1e3 * raw["cores"])
             for run_ms, s in zip(L["executor_run_ms"], L["round_s_traced"]) if s > 0]
     n_ops = max(1, len(ops))
+    parts = dict(raw["setup_parts_ms"])
+    probe_forms = raw.get("staged_probe", {}).get("forms", [])
+    kv_ms = L["kv_ms"] or {}
     m = {
-        "session.build_ms": (dict(raw["setup_parts_ms"])["session.build"], "ms"),
+        "session.build_ms": (parts["session.build"], "ms"),
+        "tables.probe_ms": (parts.get("tables.probe", 0.0), "ms"),
+        "tables.load_ms": (parts.get("tables.load", 0.0), "ms"),
         "plan.analysis_ms": (sum(L["plan_analysis_ms"]) / n_ops, "ms"),
         "plan.optimizer_ms": (sum(L["plan_optimizer_ms"]) / n_ops, "ms"),
         "plan.planning_ms": (sum(L["plan_planning_ms"]) / n_ops, "ms"),
@@ -310,35 +322,38 @@ def per_layer(raw, report):
         "driver.rows": (sum(o["rows"] for o in ops) / n_rounds, "count"),
         "jvm.gc_ms": (raw["jvm_gc_ms_timed"] / max(1, len(raw["rounds"])), "ms"),
         "jvm.heap_after_gc_mb": (raw["retained_heap_mb"], "MB"),
+        "exec.valid_ms": (sum(raw["exec_valid_ms"]) / n_ops, "ms"),
+        "exec.run_ms": (sum(L["exec_run_ms"]) / n_rounds, "ms"),
         "exec.declarative_share": (
             sum(o["form"] == decl.get(o["name"]) for o in queries) / len(queries)
-            if queries and raw["workload"].startswith("olap") else 0.0, "ratio"),
-        "layouts.staged_answer_share": (staged_share(raw, queries, layout_forms), "ratio"),
+            if queries and raw["workload"] == "olap" else 0.0, "ratio"),
+        "layouts.stage_ms": (parts.get("layouts.stage", 0.0), "ms"),
+        "layouts.staged_answer_share": (
+            sum(f in layout_forms for f in probe_forms) / len(probe_forms)
+            if probe_forms else 0.0, "ratio"),
         "kv.get_input_bytes": (med([p["input_bytes"] for p in gets]) if gets else 0.0, "bytes"),
         "kv.get_tasks": (med([p["tasks"] for p in gets]) if gets else 0.0, "count"),
         "kv.files_per_version": (
             med(raw["kv"]["files_per_version"]) if raw["workload"] == "kv" else 0.0, "count"),
     }
+    for name in KV_CALLS:
+        xs = kv_ms.get(f"Stash.{name}", [])
+        m[f"kv.{name}_ms"] = (med(xs) if xs else 0.0, "ms")
+    for q in PIPELINE_JOBS:
+        xs = [o["ms"] for o in ops if o["name"] == q]
+        js = [p["jobs"] for p in per_op if p["name"] == q]
+        short = q.split("_")[0]
+        m[f"pipeline.{short}.ms"] = (med(xs) if xs else 0.0, "ms")
+        m[f"pipeline.{short}.jobs"] = (med(js) if js else 0.0, "count")
     for layer in LAYERS:
         m[f"self_share.{layer}"] = (self_ms.get(layer, 0.0) / total_self, "ratio")
     m["trace.round_overhead"] = (rs_traced / rs_plain - 1.0, "ratio")
     m["counters.steady"] = (0.0 if L["unsteady_counters"] else 1.0, "count")
 
-    # layer figures of the layers a workload runs: printed, not in the JSON
-    parts = dict(raw["setup_parts_ms"])
-    shown = [(k + "_ms", v, "ms") for k, v in parts.items() if k != "session.build"]
-    if raw.get("exec_valid_ms"):
-        shown.append(("exec.valid_ms", sum(raw["exec_valid_ms"]) / n_ops, "ms"))
-    if L["exec_run_ms"]:
-        shown.append(("exec.run_ms", sum(L["exec_run_ms"]) / n_rounds, "ms"))
-    for name, xs in (L["kv_ms"] or {}).items():
-        shown.append((f"kv.{name.split('.')[-1]}_ms", med(xs), "ms"))
-    if raw["workload"] == "pipeline":
-        for q in sorted({o["name"] for o in ops}):
-            js = [p["jobs"] for p in per_op if p["name"] == q]
-            shown.append((f"pipeline.{q.split('_')[0]}.ms",
-                          med([o["ms"] for o in ops if o["name"] == q]), "ms"))
-            shown.append((f"pipeline.{q.split('_')[0]}.jobs", med(js), "count"))
+    # set-up parts and per-round self times: printed, not in the JSON
+    shown = [(k + "_ms", v, "ms") for k, v in parts.items() if k not in SETUP_IN_JSON]
+    if gets:
+        shown.append(("kv.get_ms", med(kv_ms.get("Stash.get", [])), "ms"))
     for layer, v in sorted(self_ms.items()):
         shown.append((f"self_ms.{layer}", v / n_rounds, "ms"))
     if "staged_probe" in raw:
@@ -353,7 +368,12 @@ def per_layer(raw, report):
     return m
 
 
-LAYERS = ("op", "exec", "kv", "collect", "spark")
+LAYERS = ("op", "exec", "pipeline", "kv", "collect", "spark")
+KV_CALLS = ("addAll", "remove", "save", "open")
+# the pipeline workload's jobs (perfbench.Main.PipelineQueries)
+PIPELINE_JOBS = ("q81_curation_funnel", "q48_incremental_neardup", "q88_ann_ivfadc",
+                 "q90_lr_quality", "q83_codec_roundtrip")
+SETUP_IN_JSON = ("session.build", "tables.probe", "tables.load", "layouts.stage")
 
 
 # ---- main ------------------------------------------------------------------
@@ -364,7 +384,7 @@ def main():
     ap.add_argument("--seed", type=int, default=DEFAULT_SEED,
                     help=f"input seed (default {DEFAULT_SEED}; recheck claims on the "
                          f"held-out seed {HELD_OUT_SEED})")
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
     start = time.time()
@@ -380,9 +400,6 @@ def main():
     os.makedirs(RUN)
     classpath = build()
     deadline = time.time() + RUN_LIMIT_S - 20
-    if args.workload != "kv":
-        gen_data.generate(os.path.join(RUN, "data"), args.seed)
-        log(f"inputs generated at {time.time() - start:.1f} s")
     raw = run_jvm(classpath, args, deadline)
     log(f"engine run done at {time.time() - start:.1f} s")
 
@@ -398,8 +415,8 @@ def main():
     for f in raw["failures"][:20]:
         report(f"FAIL {f}")
     con = None
-    if args.workload in ("olap", "olap_staged"):
-        con = oracle.connect(os.path.join(RUN, "data"), cores())
+    if args.workload == "olap":
+        con = oracle.connect(DATA, cores())
         bad = oracle.compare(con, os.path.join(RUN, "results"), dict(raw["oracle_sql"]), report)
         attempted += len(raw["oracle_sql"])
         failed += bad
