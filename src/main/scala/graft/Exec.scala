@@ -77,89 +77,19 @@ object Exec {
   /** Staged-layout probe: valid only when the layout is already cached in
     * this session (the dispatcher never stages implicitly).
     */
-  private def eventsLayoutStaged: (SparkSession, String) => Option[String] =
-    (s, d) => if (Layouts.isEventsLayoutStaged(s, d)) None
-      else Some("events layout not staged in this session")
-  private def ordersLayoutStaged: (SparkSession, String) => Option[String] =
-    (s, d) => if (Layouts.isOrdersLayoutStaged(s, d)) None
-      else Some("orders layout not staged in this session")
-  private def factsLayoutStaged: (SparkSession, String) => Option[String] =
-    (s, d) => if (Layouts.isFactsLayoutStaged(s, d)) None
-      else Some("fact layout not staged in this session")
+  private def layoutStaged(tag: String): (SparkSession, String) => Option[String] =
+    (s, d) => if (Layouts.byTag(tag).isStaged(s, d)) None
+      else Some(s"$tag layout not staged in this session")
 
-  /** The registry: per logical query, forms ordered fastest-first — by
-    * the RECORDED per-form medians in [[recordedMedianSec]], not by hand
-    * (r13 verdict item 5): non-declarative forms sort ascending by their
-    * measured steady-state time (unmeasured forms keep their written
-    * position after the measured ones), and the declarative twin stays
-    * last (always valid) regardless of its time, because it is the
-    * fallback contract, not a speed claim. Every validity bound checks
-    * the kernel's OWN exported input/build frame (`*KernelInput`/
+  /** The registry: per logical query, forms ordered fastest-first by
+    * hand, with the declarative twin last (always valid) because it is the
+    * fallback contract, not a speed claim. Every validity bound checks the
+    * kernel's OWN exported input/build frame (`*KernelInput`/
     * `*KernelProbe`/`*KernelBuild` in the query objects) — one definition
     * for what the kernel scans and what the dispatcher validates, so the
     * two cannot drift (r13 review).
     */
-  lazy val registry: Map[String, Seq[Form]] =
-    writtenRegistry.map { case (q, forms) => q -> orderByMedian(forms) }
-
-  /** Per-form steady-state medians (seconds at sf0.1) from the cleanest
-    * final-HEAD bench window of record, tools/bench_full_r13g.json (0 est,
-    * 0 suspect, floor probes 0.039–0.111 s) — each form's SparkEntry twin
-    * entry measured under the full bench protocol. These order the
-    * registry; they are provenance-pinned data, not tuning knobs: refresh
-    * them when a new clean window shows a different ordering.
-    */
-  private[graft] val recordedMedianSec: Map[String, Double] = Map(
-    "q1ColumnarKernel" -> 0.0790,            // q101_columnar_pricing
-    "q1" -> 0.2114,                          // q1_pricing_agg
-    "q2ColumnarKernel" -> 0.0781,            // q106_columnar_factjoin
-    "q2FromFacts(bucketed)" -> 1.0202,       // q98_layout_factjoin
-    "q2" -> 0.3935,                          // q2_join_broadcast
-    "q3ColumnarKernel" -> 0.1097,            // q105_columnar_rangejoin
-    "q3" -> 0.3608,                          // q3_range_join
-    "q4ColumnarKernel" -> 0.0336,            // q109_columnar_semianti
-    "q4" -> 0.1251,                          // q4_semi_anti
-    "q5ColumnarKernel" -> 0.0571,            // q107_columnar_custtopk
-    "q5From(bucketed)" -> 0.1688,            // q99_layout_topk
-    "q5" -> 0.1972,                          // q5_rank_window
-    "q6ColumnarKernel" -> 0.0660,            // q104_columnar_topk
-    "q6" -> 0.1528,                          // q6_topk
-    "q7ColumnarKernel" -> 0.0591,            // q108_columnar_rollup
-    "q7" -> 0.2636,                          // q7_rollup
-    "q9aColumnarKernel" -> 0.0381,           // q114_columnar_distinct
-    "q9a" -> 0.1713,                         // q9a_distinct
-    "q10ColumnarKernel" -> 0.0417,           // q110_columnar_json
-    "q10" -> 0.1207,                         // q10_json
-    "q11ColumnarKernel" -> 0.0493,           // q100_columnar_tumbling
-    "q11" -> 0.1374,                         // q11_tumbling
-    "q12FromColumnarSortedKernel" -> 0.0469, // q103_columnar_session
-    "q12" -> 0.1198,                         // q12_session
-    "q13FromColumnarSortedKernel" -> 0.0540, // q102_columnar_lag
-    "q13" -> 0.2781,                         // q13_lag
-    "q14ColumnarKernel" -> 0.0514,           // q113_columnar_dedup
-    "q14" -> 0.0971,                         // q14_exact_dedup
-    "q16ColumnarKernel" -> 0.0534,           // q111_columnar_cosine
-    "q16" -> 0.2105,                         // q16_cosine_topk
-    "q17ColumnarKernel" -> 0.0508,           // q112_columnar_tokens
-    "q17" -> 0.1199,                         // q17_tokens
-    "q21FromSortedKernel" -> 0.3076,         // q94_kernel_asof
-    "q21" -> 0.3306,                         // q21_asof_join
-    "q51FromSortedKernel" -> 0.1010,         // q95_kernel_funnel
-    "q51" -> 0.2198,                         // q51_funnel
-    "q70FromSortedKernel" -> 0.2245,         // q96_kernel_retention
-    "q70" -> 0.2398,                         // q70_retention
-    "q71FromSortedKernel" -> 0.3772,         // q97_kernel_transitions
-    "q71" -> 0.3820)                         // q71_transitions
-
-  /** Measured-ascending order over the non-declarative forms (stable:
-    * unmeasured forms keep their written position, after every measured
-    * one); the declarative twin stays last unconditionally.
-    */
-  private def orderByMedian(forms: Seq[Form]): Seq[Form] =
-    forms.init.sortBy(f =>
-      recordedMedianSec.getOrElse(f.name, Double.MaxValue)) :+ forms.last
-
-  private val writtenRegistry: Map[String, Seq[Form]] = Map(
+  val registry: Map[String, Seq[Form]] = Map(
     "q1" -> Seq(
       Form("q1ColumnarKernel", Relational.q1ColumnarKernel,
         columnarScanOf(Relational.q1KernelInput)),
@@ -177,9 +107,9 @@ object Exec {
       // compare the layout against a broadcast join it never competes
       // with at scale.
       Form("q2FromFacts(bucketed)", (s, d) => {
-        val (li, o) = Layouts.factsByOrderkeyStaged(s, d)
+        val (li, o) = Layouts.factsLayout.staged(s, d)
         Relational.q2FromFacts(li, o, s, d)
-      }, factsLayoutStaged, layout = Some("facts")),
+      }, layoutStaged("facts"), layout = Some("facts")),
       Form("q2", Relational.q2, always)),
     "q3" -> Seq(
       Form("q3ColumnarKernel", Relational.q3ColumnarKernel,
@@ -195,8 +125,8 @@ object Exec {
       Form("q5ColumnarKernel", Relational.q5ColumnarKernel,
         columnarScanOf(Relational.q5KernelInput)),
       Form("q5From(bucketed)",
-        (s, d) => Relational.q5From(Layouts.ordersByCustkeyStaged(s, d)),
-        ordersLayoutStaged, layout = Some("orders")),
+        (s, d) => Relational.q5From(Layouts.ordersLayout.staged(s, d)),
+        layoutStaged("orders"), layout = Some("orders")),
       Form("q5", Relational.q5, always)),
     "q6" -> Seq(
       Form("q6ColumnarKernel", Relational.q6ColumnarKernel,
@@ -222,13 +152,13 @@ object Exec {
       Form("q11", Events.q11, always)),
     "q12" -> Seq(
       Form("q12FromColumnarSortedKernel",
-        (s, d) => Events.q12FromColumnarSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q12FromColumnarSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q12", Events.q12, always)),
     "q13" -> Seq(
       Form("q13FromColumnarSortedKernel",
-        (s, d) => Events.q13FromColumnarSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q13FromColumnarSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q13", Events.q13, always)),
     "q14" -> Seq(
       Form("q14ColumnarKernel", TextVec.q14ColumnarKernel,
@@ -240,10 +170,9 @@ object Exec {
           bounded(TextVec.q16QueryFrame, "query-vector side"))),
       // the staged IVFADC deployment path at its exactness-pinned
       // operating point (all cells probed, everything re-ranked == exact
-      // q16 — the q136 pin). Unmeasured in the medians table, so ordering
-      // places it between the kernel and the declarative twin; its
-      // deployment value is the pruned-scan shape at (nprobe ≪ cells,
-      // rerank ≪ N), not this full-probe speed.
+      // q16 — the q136 pin), placed between the kernel and the
+      // declarative twin; its deployment value is the pruned-scan shape at
+      // (nprobe ≪ cells, rerank ≪ N), not this full-probe speed.
       Form("q16AnnStagedExact",
         (s, d) => graft.queries.Pipeline.q136(s, d),
         (s, d) => if (graft.queries.Pipeline.isAnnIndexStaged(s, d)) None
@@ -256,23 +185,23 @@ object Exec {
       Form("q17", TextVec.q17, always)),
     "q21" -> Seq(
       Form("q21FromSortedKernel",
-        (s, d) => Events.q21FromSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q21FromSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q21", Events.q21, always)),
     "q51" -> Seq(
       Form("q51FromSortedKernel",
-        (s, d) => Events.q51FromSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q51FromSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q51", Events.q51, always)),
     "q70" -> Seq(
       Form("q70FromSortedKernel",
-        (s, d) => Events.q70FromSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q70FromSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q70", Events.q70, always)),
     "q71" -> Seq(
       Form("q71FromSortedKernel",
-        (s, d) => Events.q71FromSortedKernel(Layouts.eventsByUserStaged(s, d)),
-        eventsLayoutStaged, layout = Some("events")),
+        (s, d) => Events.q71FromSortedKernel(Layouts.eventsLayout.staged(s, d)),
+        layoutStaged("events"), layout = Some("events")),
       Form("q71", Events.q71, always)))
 
   /** True when `t` or anything in its cause chain is the seam's loud-guard
@@ -324,11 +253,10 @@ object Exec {
     * entry points a user stages through, so a family-staged layout is
     * indistinguishable from an explicitly staged one.
     */
-  private val layoutStagers: Map[String, (SparkSession, String) => Unit] = Map(
-    "events" -> ((s, d) => { Layouts.eventsByUserCached(s, d); () }),
-    "orders" -> ((s, d) => { Layouts.ordersByCustkeyCached(s, d); () }),
-    "facts"  -> ((s, d) => { Layouts.factsByOrderkeyCached(s, d); () }),
-    "ann"    -> ((s, d) => { graft.queries.Pipeline.stageAnnIndex(s, d); () }))
+  private val layoutStagers: Map[String, (SparkSession, String) => Unit] =
+    Layouts.byTag.map { case (tag, l) =>
+      tag -> ((s: SparkSession, d: String) => { l.cached(s, d); () })
+    } + ("ann" -> ((s, d) => { graft.queries.Pipeline.stageAnnIndex(s, d); () }))
 
   /** Amortized family dispatch (r13 verdict item 5): when a caller asks
     * for several queries AT ONCE, a layout used by ≥ `stageThreshold` of

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Content fingerprint of an input path — the staleness guard every
-  * pay-once memo keys on (r15 verdict item 3: session-scope memos
+  * pay-once memo ([[SourceMemo]]) keys on (r15 verdict item 3: session-scope memos
   * trusted `dir` immutability for the session lifetime with only a doc
   * caveat; a regenerated testdata dir silently served stale layouts,
   * merge tables, and ANN indexes).
@@ -28,25 +28,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Fingerprint {
 
-  /** The staleness-guarded memo-key convention, in ONE place: `dir`
-    * plus the fingerprints of the source files a memoized artifact was
-    * built from (or of the whole dir when `rel` is empty). Every
-    * pay-once memo (Layouts stagings, prepared scans, shard roots, BPE
-    * tables) keys on this, so a future key-format change has a single
-    * definition (r16 review).
-    *
-    * FINGERPRINT-THEN-BUILD WINDOW (r17 verdict item 5): a regeneration
-    * landing between the fingerprint read and the build reads the NEW
-    * generation's data but caches it under the OLD generation's key. The
-    * mislabel cannot be SERVED later — after the regeneration completes,
-    * every subsequent call fingerprints the new generation, keys past the
-    * stale entry, and `Memo.evictSuperseded` reclaims it — so the blast
-    * radius is the one inherently-racy mid-regeneration call itself.
-    * `Tables.load` additionally re-fingerprints after the build and
-    * refuses to cache on mismatch (its frames are returned to callers
-    * directly); the staging memos accept the self-heal, because their
-    * values are committed artifacts whose own fingerprint gate
-    * (adoption-by-fp) rejects a cross-generation mix at read time.
+  /** The fingerprint convention for memos whose source is several files:
+    * `dir` plus the fingerprints of the source files a memoized artifact
+    * was built from (or of the whole dir when `rel` is empty). Layouts
+    * stagings, prepared scans, kernel build sides, shard roots and BPE
+    * tables hand it to [[SourceMemo]] as their generation, so a future
+    * format change has a single definition (r16 review). How a fingerprint
+    * guards a memo — replacement of the superseded generation, and the
+    * re-fingerprint after every build that closes the fingerprint-then-
+    * build window (r17 verdict item 5) — lives in [[SourceMemo]] alone.
     */
   def key(spark: SparkSession, dir: String, rel: String*): String =
     if (rel.isEmpty) s"$dir@" + of(spark, dir)

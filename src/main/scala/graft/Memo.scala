@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.SparkSession
+
 /** One-slot lazy holder for pay-once memo maps whose value is expensive
   * to build (bucketed-table stagings, ANN index training, BPE merge
-  * tables): `computeIfAbsent` only CONSTRUCTS the cell, so the
+  * tables): the map operation only CONSTRUCTS the cell, so the
   * ConcurrentHashMap bin lock is held for nanoseconds and unrelated keys
   * hashing to the same bin never block behind a staging run (CHM's
   * contract says mapping functions must be short); the expensive thunk
@@ -10,12 +14,12 @@ package graft
   * SAME key still compute exactly once.
   *
   * `done` is the PROBE contract (r16 review): dispatcher probes
-  * (isAnnIndexStaged, Layouts.is*LayoutStaged) must count only cells
-  * whose staging COMPLETED — a thrown staging leaves the cell in the map
-  * (computeIfAbsent has already inserted it), and a probe that counted
-  * it would route dispatch onto a layout that was never built. Callers
-  * force values through [[force]], which evicts the cell on failure so
-  * the next explicit call retries cleanly.
+  * (isAnnIndexStaged, Layouts' staged-layout probes) must count only
+  * cells whose staging COMPLETED — a thrown staging leaves the cell in the
+  * map until its forcing caller evicts it, and a probe that counted it
+  * would route dispatch onto a layout that was never built. Callers force
+  * values through [[force]], which evicts the cell on failure so the next
+  * explicit call retries cleanly.
   */
 private[graft] final class LazyCell[T](thunk: => T) {
   @volatile var done: Boolean = false
@@ -29,36 +33,111 @@ private[graft] object LazyCell {
     * pre-LazyCell behavior, where a throw inside computeIfAbsent left no
     * mapping behind.
     */
-  def force[K, T](map: java.util.concurrent.ConcurrentHashMap[K, LazyCell[T]],
-      key: K, cell: LazyCell[T]): T =
+  def force[K, T](map: ConcurrentHashMap[K, LazyCell[T]], key: K, cell: LazyCell[T]): T =
     try cell.value
     catch { case e: Throwable => map.remove(key, cell); throw e }
 }
 
-private[graft] object Memo {
+/** The engine's one pay-once session memo, and the one place the
+  * staleness contract lives (r15 verdict item 3: a dir regenerated in
+  * place must never be served from a memo).
+  *
+  * It holds AT MOST ONE generation per (session, identity) — a generation
+  * is the [[Fingerprint]] of the source files the value was built from
+  * plus a [[LazyCell]] holding the value. The identity names WHAT is
+  * memoized (a table path, a (dir, bucket count) layout, a (dir, tag)
+  * kernel build); the fingerprint says from WHICH bytes.
+  *
+  *  - [[get]] with the live generation's fingerprint returns its value
+  *    (building it once, outside the map's bin lock). A different
+  *    fingerprint REPLACES the generation: the superseded value can never
+  *    be asked for again (its fingerprint cannot recur), so it is dropped
+  *    on the spot — no predicate, no scan of the map — and `release` frees
+  *    whatever it pins beyond the reference (a live-set entry, a temp dir).
+  *    `release` runs only for values that finished building.
+  *  - A build that throws leaves nothing behind, so the next call retries.
+  *  - FINGERPRINT-THEN-BUILD WINDOW (r16 advice 4, r17 verdict item 5): a
+  *    regeneration landing between the fingerprint read and the build
+  *    would file the NEW bytes under the OLD fingerprint. Every build is
+  *    therefore followed by one more fingerprint read; on a mismatch the
+  *    value is still returned (one mid-regeneration read is inherently
+  *    racy) but its generation is dropped, never served again. That costs
+  *    one listing per build, none per hit. Nothing releases a value
+  *    dropped this way: its caller is still using it.
+  *  - [[completed]] / [[completedIds]] are the dispatcher probes: they see
+  *    only values that finished building at the CURRENT fingerprint.
+  *
+  * Removal races are benign: an in-flight query holding a superseded
+  * value keeps it reachable, and a concurrent caller still holding the
+  * old fingerprint can only briefly swap the old generation back, after
+  * which its own post-build check (or the next current-fingerprint call)
+  * replaces it again.
+  */
+private[graft] final class SourceMemo[I, V](release: V => Unit = (_: V) => ()) {
 
-  /** q140's stale-generation eviction, generalized (r16 advice): every
-    * fingerprint-in-key memo strands the PREVIOUS generation's entry on an
-    * in-place regeneration — the old key can never be requested again (its
-    * fingerprint cannot recur), so whatever the value pins (a DataFrame
-    * plan, a trained index, a merge table) leaks for the process lifetime.
-    * Callers invoke this on each memoized access with a predicate matching
-    * keys SUPERSEDED by the one about to be used (same logical identity,
-    * different fingerprint); `cleanup` releases anything the value pins
-    * beyond the reference itself (unpersist, temp-dir delete).
-    *
-    * Removal races are benign by the memos' own contract: an in-flight
-    * query holding the old value keeps it reachable (GC-safe), and a
-    * concurrent re-insert of a stale key cannot happen because its
-    * fingerprint no longer matches the path contents.
+  private final class Gen(val fp: String, val cell: LazyCell[V])
+
+  private val gens = new ConcurrentHashMap[(SparkSession, I), Gen]()
+
+  /** The memoized value of `id` at fingerprint `fp`, building it when the
+    * live generation is missing or was built from other bytes. `fp` is
+    * read once before the lookup and once more after a build; `build`
+    * receives the fingerprint its generation is filed under (for
+    * artifacts that carry it, e.g. in a committed directory name).
     */
-  def evictSuperseded[K, V](
-      map: java.util.concurrent.ConcurrentHashMap[K, V],
-      isSuperseded: K => Boolean,
-      cleanup: V => Unit = (_: V) => ()): Unit = {
-    import scala.jdk.CollectionConverters._
-    map.entrySet.asScala.filter(e => isSuperseded(e.getKey)).toSeq.foreach { e =>
-      if (map.remove(e.getKey, e.getValue)) cleanup(e.getValue)
-    }
+  def get(spark: SparkSession, id: I, fp: => String)(build: String => V): V = {
+    val f = fp
+    val key = (spark, id)
+    var built: Gen = null
+    var superseded: Gen = null
+    val gen = gens.compute(key, (_, old) =>
+      if (old != null && old.fp == f) old
+      else { superseded = old; built = new Gen(f, new LazyCell(build(f))); built })
+    releaseIfDone(superseded)
+    val v =
+      try gen.cell.value
+      catch { case e: Throwable => gens.remove(key, gen); throw e }
+    if ((built ne null) && fp != f) gens.remove(key, built)
+    v
   }
+
+  /** Install an already-built `value` as the live generation of `id` — for
+    * callers that commit an artifact themselves (ANN compaction). The
+    * generation it replaces is released unless it holds the same value.
+    */
+  def put(spark: SparkSession, id: I, fp: String, value: V): Unit = {
+    val cell = new LazyCell(value)
+    cell.value
+    val old = gens.put((spark, id), new Gen(fp, cell))
+    if (old != null && old.cell.done && old.cell.value != value) release(old.cell.value)
+  }
+
+  /** True when `id`'s live generation finished building at `fp`. */
+  def completed(spark: SparkSession, id: I, fp: String): Boolean = {
+    val g = gens.get((spark, id))
+    g != null && g.fp == fp && g.cell.done
+  }
+
+  /** Every identity of `spark` whose live generation finished building at
+    * `fp` (the Layouts probe: which bucket counts are staged).
+    */
+  def completedIds(spark: SparkSession, fp: String): Seq[I] = {
+    import scala.jdk.CollectionConverters._
+    gens.entrySet.asScala.collect {
+      case e if (e.getKey._1 eq spark) && e.getValue.fp == fp && e.getValue.cell.done =>
+        e.getKey._2
+    }.toSeq
+  }
+
+  /** Test probe: generations held for `spark` whose identity matches `p`,
+    * at any fingerprint — in-place regenerations keep this at one per
+    * identity (StalenessSpec).
+    */
+  def entriesFor(spark: SparkSession)(p: I => Boolean): Int = {
+    import scala.jdk.CollectionConverters._
+    gens.keySet.asScala.count(k => (k._1 eq spark) && p(k._2))
+  }
+
+  private def releaseIfDone(g: Gen): Unit =
+    if (g != null && g.cell.done) release(g.cell.value)
 }

@@ -33,64 +33,24 @@ object Tables {
     * Every current self-join in the repo does this (q15/q36 rename, q59
     * windows); the contract is recorded here because fresh exprIds per
     * call used to mask the mistake.
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), LazyCell[DataFrame]]()
-
-  /** Memo key carries [[Fingerprint]] of the file (metadata-only listing,
-    * recomputed per call — microseconds against the ~0.3–0.5 s of plan
-    * construction the memo saves): a table regenerated in place mid-
-    * session gets a fresh frame on the next load instead of a stale
-    * cached plan whose file listing no longer matches (r15 verdict 3).
     *
-    * The value is a [[LazyCell]] so the ~0.3–0.5 s `spark.read.parquet`
-    * build runs OUTSIDE computeIfAbsent (CHM's short-mapping-function
-    * contract — unrelated tables hashing to the same bin must not block
-    * behind a plan build; r16 advice), and superseded generations are
-    * evicted on each access ([[Memo.evictSuperseded]]) so regenerating
-    * dirs don't strand old plans for the process lifetime.
-    *
-    * Fingerprint-then-read window (r16 advice 4): a regeneration landing
-    * between the fingerprint and the parquet read would cache a NEW-
-    * generation frame under the OLD-generation key — permanently
-    * mislabeled even though the next call self-heals. Guard: when this
-    * call BUILT the cell, re-fingerprint after the build and drop the
-    * entry if the two disagree (the frame is still returned — one
-    * mid-regeneration read is inherently racy either way — but it is
-    * never served from the memo again).
+    * Memo identity is the table path, its generation the path's
+    * [[Fingerprint]] (metadata-only listing, recomputed per call —
+    * microseconds against the ~0.3–0.5 s of plan construction the memo
+    * saves), so a table regenerated in place mid-session gets a fresh
+    * frame on the next load instead of a stale cached plan whose file
+    * listing no longer matches (r15 verdict 3).
     */
-  /** Test probe (r17): memo entries currently held for `path` — the
-    * superseded-generation eviction (r16 advice) keeps this at 1 across
-    * in-place regenerations; StalenessSpec pins it.
-    */
-  private[graft] def memoEntriesFor(spark: SparkSession, path: String): Int = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet.asScala.count(k => (k._1 eq spark) && k._2 == path)
-  }
+  private[graft] val memo = new SourceMemo[String, DataFrame]()
 
-  /** Test probe (r18): NANOS-clone memo entries currently held for `dir`'s
-    * events table (the `#nanosAsLong` marker keys) — eviction keeps this at
-    * ≤ 1 per tz across in-place regenerations.
+  /** NANOS-clone frames of events, per (dir, caller time zone) — see
+    * [[events]].
     */
-  private[graft] def cloneEntriesFor(spark: SparkSession, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet.asScala.count(k =>
-      (k._1 eq spark) && k._2.startsWith(s"$dir/events.parquet#nanosAsLong"))
-  }
+  private[graft] val clones = new SourceMemo[(String, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val fp = Fingerprint.of(spark, path)
-    Memo.evictSuperseded(cache,
-      (k: (SparkSession, String, String)) =>
-        (k._1 eq spark) && k._2 == path && k._3 != fp)
-    val key = (spark, path, fp)
-    var built = false
-    val cell = cache.computeIfAbsent(key,
-      _ => { built = true; new LazyCell(spark.read.parquet(path)) })
-    val df = LazyCell.force(cache, key, cell)
-    if (built && Fingerprint.of(spark, path) != fp) cache.remove(key, cell)
-    df
+    memo.get(spark, path, Fingerprint.of(spark, path))(_ => spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
@@ -133,10 +93,10 @@ object Tables {
     *
     * CONF-FREEZE CONTRACT (r11 advice): the clone copies the caller's
     * modifiable runtime confs ONCE, when the fallback first fires. The
-    * cache key carries the caller's session time zone — the one copied
-    * conf that changes scan-visible values (the NTZ→TIMESTAMP cast and
-    * timestamp rendering) — so a caller that changes its timezone after a
-    * first read gets a FRESH clone, not the stale one. Other confs copied
+    * clone memo's identity carries the caller's session time zone — the
+    * one copied conf that changes scan-visible values (the NTZ→TIMESTAMP
+    * cast and timestamp rendering) — so a caller that changes its
+    * timezone after a first read gets a FRESH clone, not the stale one. Other confs copied
     * at clone time stay frozen for the cached frame's life; they affect
     * expression semantics layered on top of the scan, which the returned
     * frame does not contain. Cost of the tz key: each DISTINCT timezone a
@@ -146,48 +106,33 @@ object Tables {
     * by the ~600 zone ids, and correctness beats the old stale-conf read).
     */
   def events(s: SparkSession, d: String): DataFrame = {
+    val tz = scala.util.Try(s.conf.get("spark.sql.session.timeZone")).getOrElse("")
+    val path = s"$d/events.parquet"
+    val id = (d, tz)
+    def nanosClone(): DataFrame = clones.get(s, id, Fingerprint.of(s, path)) { _ =>
+      // newSession shares the SparkContext but owns its SQLConf; copy the
+      // caller's modifiable runtime confs across (timezone included) so
+      // the scan's session differs from the caller's in exactly one conf
+      // (cloneSession would do this in one call but is private[sql])
+      val clone = s.newSession()
+      s.conf.getAll.foreach { case (k, v) =>
+        if (clone.conf.isModifiable(k)) clone.conf.set(k, v)
+      }
+      clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      clone.read.parquet(path)
+    }
     // a prior call that fell back to the NANOS clone already proved the
-    // plain read fails for this (session, dir) — go straight to the cached
+    // plain read fails for this generation — go straight to the cached
     // clone frame instead of re-paying a failing file-listing + footer
     // inference on every call
-    val tz = scala.util.Try(s.conf.get("spark.sql.session.timeZone")).getOrElse("")
-    val fp = Fingerprint.of(s, s"$d/events.parquet")
-    // Superseded-generation eviction for the CLONE entries too (r17
-    // advice): load()'s eviction matches k._2 == path exactly, so the
-    // "#nanosAsLong#tz=..." marker keys — and the cloned sessions their
-    // frames capture — would otherwise strand for the process lifetime on
-    // an in-place regeneration, the exact leak class load() closes for
-    // the plain path.
-    Memo.evictSuperseded(cache,
-      (k: (SparkSession, String, String)) =>
-        (k._1 eq s) && k._2.startsWith(s"$d/events.parquet#nanosAsLong") && k._3 != fp)
-    val nanosKey = (s, s"$d/events.parquet#nanosAsLong#tz=$tz", fp)
-    val cachedClone = cache.get(nanosKey)
     val raw =
-      if (cachedClone != null && cachedClone.done)
-        LazyCell.force(cache, nanosKey, cachedClone)
+      if (clones.completed(s, id, Fingerprint.of(s, path))) nanosClone()
       else try load(s, d, "events")
       catch { case primary: Exception =>
         // presumed NANOS footer rejection; retried on an isolated clone.
         // If the clone read fails too, the file is genuinely unreadable —
         // surface the ORIGINAL error, not the retry's.
-        try {
-          val cell = cache.computeIfAbsent(nanosKey, _ => new LazyCell({
-            // newSession shares the SparkContext but owns its SQLConf; copy
-            // the caller's modifiable runtime confs across (timezone
-            // included) so the scan's session differs from the caller's in
-            // exactly one conf (cloneSession would do this in one call but
-            // is private[sql])
-            val clone = s.newSession()
-            s.conf.getAll.foreach { case (k, v) =>
-              if (clone.conf.isModifiable(k)) clone.conf.set(k, v)
-            }
-            clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            clone.read.parquet(s"$d/events.parquet")
-          }))
-          LazyCell.force(cache, nanosKey, cell)
-        }
-        catch { case _: Exception => throw primary }
+        try nanosClone() catch { case _: Exception => throw primary }
       }
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -55,47 +55,21 @@ object ColumnarScan {
     * is a pure scan+projection/filter — its plan contains no Exchange, so
     * there is no materialized shuffle stage a later collect could silently
     * reuse; every job over it re-reads parquet in full. Callers must only
-    * memoize frames derived deterministically from (session, dir), and the
-    * dir must be an immutable corpus (the same contract [[graft.Layouts]]
-    * staging already relies on — a dir whose files are rewritten in place
-    * invalidates every staged artifact, not just this memo).
-    */
-  private val inputMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, String), graft.LazyCell[DataFrame]]()
-
-  /** The memo key folds in [[graft.Fingerprint]] of `d` (metadata-only
+    * memoize frames derived deterministically from (session, dir).
+    *
+    * The memo is a [[graft.SourceMemo]] with identity (dir, tag) and
+    * generation [[graft.Fingerprint]] of the whole of `d` (metadata-only
     * listing, recomputed per call): a corpus regenerated in place mid-
     * session gets a freshly planned frame on the next dispatch instead of
     * a stale prepared plan — the r15 "dir immutability trusted on a doc
     * caveat" finding. The listing costs ~sub-ms against the ~30 ms the
     * prepared plan saves, so the guard does not erode the memo's point.
-    *
-    * [[graft.LazyCell]] value + superseded-generation eviction (r16
-    * advice): the ~30 ms plan build runs outside the CHM bin lock, and a
-    * regeneration evicts the old generation's prepared frames instead of
-    * stranding them for the process lifetime.
     */
-  /** Test probe (r17): memo entries held for (session, dir, tag) across
-    * all generations — eviction keeps it at 1 (StalenessSpec).
-    */
-  private[graft] def inputMemoEntriesFor(s: org.apache.spark.sql.SparkSession,
-      d: String, tag: String): Int = {
-    import scala.jdk.CollectionConverters._
-    inputMemo.keySet.asScala.count(k =>
-      (k._1 eq s) && k._3 == tag && k._2.startsWith(s"$d@"))
-  }
+  private[graft] val inputMemo = new graft.SourceMemo[(String, String), DataFrame]()
 
   def inputCached(s: org.apache.spark.sql.SparkSession, d: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    val fkey = graft.Fingerprint.key(s, d)
-    graft.Memo.evictSuperseded(inputMemo,
-      (k: (org.apache.spark.sql.SparkSession, String, String)) =>
-        (k._1 eq s) && k._3 == tag && k._2 != fkey && k._2.startsWith(s"$d@"))
-    val key = (s, fkey, tag)
-    val cell = inputMemo.computeIfAbsent(key, _ => new graft.LazyCell(build))
-    graft.LazyCell.force(inputMemo, key, cell)
-  }
+      (build: => DataFrame): DataFrame =
+    inputMemo.get(s, (d, tag), graft.Fingerprint.key(s, d))(_ => build)
 
   /** The single scan leaf under `df`'s executed plan, verified columnar.
     *

@@ -450,9 +450,9 @@ object Pipeline {
     * dispatch floor on microseconds of arithmetic (the q90/lrTrain
     * shape). Under `graft.ann.maxDriverTrainRows` (default 256k rows —
     * driver heap is rows × (4·d + ~64 B), ~90 MB at d=64) collect the
-    * persisted sample ONCE; None past the bound or when any id/vector is
-    * null (null semantics stay owned by the distributed path, as in the
-    * CC fast path). The sample is already persisted and counted, so the
+    * persisted sample ONCE; None past the bound or when any id, vector or
+    * vector ELEMENT is null (null semantics stay owned by the distributed
+    * path, as in the CC fast path). The sample is already persisted and counted, so the
     * collect is one cache-read job replacing 1 + `iters` jobs per
     * training.
     */
@@ -462,7 +462,8 @@ object Pipeline {
     if (n > bound) None
     else {
       val rows = train.select(col("vec_id"), col("embedding")).collect()
-      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.getSeq[Any](1).contains(null)))
+        None
       else Some(rows.map { r =>
         val s = r.getSeq[Float](1)
         val a = new Array[Float](s.length)
@@ -513,8 +514,10 @@ object Pipeline {
       while (r < rows.length) {
         val xs = rows(r)._2
         val b = graft.expressions.IvfProbes.probes(xs, cents, 1)(0)
-        seen(b) = true
         val m = xs.numElements()
+        // a zero-length row contributes no component — the distributed
+        // posexplode emits nothing for it, so it must not mark its cell seen
+        if (m > 0) seen(b) = true
         var p = 0
         while (p < m) {
           // the exact distributed contribution: floor(x.cast(double)·1e6+0.5) as long
@@ -2498,8 +2501,13 @@ object Pipeline {
     * ship in this container). Oracle recomputes everything from doc_id
     * and text (PNG gray lossless + integer pixel math).
     */
-  private val stagedVideos = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.LazyCell[String]]()
+  /** Committed video-corpus path per dir. Superseding a generation
+    * releases its dir from the live set (it can never be adopted again),
+    * so the NEXT staging's sweep reclaims its disk — deletion deferred to
+    * staging time, never done on the read path.
+    */
+  private[graft] val stagedVideos = new graft.SourceMemo[String, String](
+    path => videoLivePaths.remove(new org.apache.hadoop.fs.Path(path).getName): Unit)
 
   /** Directory names this process is writing / has staged-or-adopted —
     * the same sweep-scoping sets the staged-ANN layout keeps (a sibling
@@ -2594,20 +2602,8 @@ object Pipeline {
     * whose staging was in flight or failed — the r17 leak).
     */
   private[graft] def videoContainers(spark: SparkSession, dir: String): DataFrame = {
-    val fp = videoSourceFp(spark, dir)
-    // eviction releases the superseded dir from the live set (it can never
-    // be adopted again), so the NEXT staging's sweep reclaims its disk —
-    // deletion deferred to staging time, never done on this read path
-    graft.Memo.evictSuperseded(stagedVideos,
-      (k: (SparkSession, String, String)) =>
-        (k._1 eq spark) && k._2 == dir && k._3 != fp,
-      (cell: graft.LazyCell[String]) => if (cell.done) {
-        videoLivePaths.remove(new org.apache.hadoop.fs.Path(cell.value).getName): Unit
-      })
-    val key = (spark, dir, fp)
-    val path = graft.LazyCell.force(stagedVideos, key,
-      stagedVideos.computeIfAbsent(key,
-        _ => new graft.LazyCell(stageOrAdoptVideos(spark, dir, fp))))
+    val path = stagedVideos.get(spark, dir, videoSourceFp(spark, dir))(
+      fp => stageOrAdoptVideos(spark, dir, fp))
     spark.read.parquet(path)
   }
 
@@ -3442,8 +3438,11 @@ object Pipeline {
   // committed corpus; crash debris and superseded generations are
   // reclaimed by the next staging's sweep. ----
 
-  private val stagedPacked = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int, Long), graft.LazyCell[String]]()
+  /** Committed packed-corpus path per (dir, shards, seqLen); superseding
+    * a generation releases its dir from the live set for the next sweep.
+    */
+  private[graft] val stagedPacked = new graft.SourceMemo[(String, Int, Long), String](
+    path => packedLivePaths.remove(new org.apache.hadoop.fs.Path(path).getName): Unit)
   private val packedInFlight =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val packedLivePaths =
@@ -3453,11 +3452,6 @@ object Pipeline {
     * for the pay-once / cold-open contract (adoption must not re-pack).
     */
   private[graft] val packedStagings = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def stagedPackedRootsFor(spark: SparkSession, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    stagedPacked.keySet.asScala.count(k => (k._1 eq spark) && k._2 == dir)
-  }
 
   /** ALL on-disk packed-corpus dirs for `dir` (committed or debris, any
     * fingerprint/params) — the sweep/leak observability probe.
@@ -3515,17 +3509,9 @@ object Pipeline {
     */
   def packedCorpus(spark: SparkSession, dir: String, shards: Int = 8,
       seqLen: Long = 512L): String = {
-    val fp = videoSourceFp(spark, dir) // = fingerprint of documents.parquet
-    graft.Memo.evictSuperseded(stagedPacked,
-      (k: (SparkSession, String, String, Int, Long)) =>
-        (k._1 eq spark) && k._2 == dir && k._3 != fp,
-      (cell: graft.LazyCell[String]) => if (cell.done) {
-        packedLivePaths.remove(new org.apache.hadoop.fs.Path(cell.value).getName): Unit
-      })
-    val key = (spark, dir, fp, shards, seqLen)
-    graft.LazyCell.force(stagedPacked, key,
-      stagedPacked.computeIfAbsent(key,
-        _ => new graft.LazyCell(stageOrAdoptPacked(spark, dir, fp, shards, seqLen))))
+    // videoSourceFp = fingerprint of documents.parquet
+    stagedPacked.get(spark, (dir, shards, seqLen), videoSourceFp(spark, dir))(
+      fp => stageOrAdoptPacked(spark, dir, fp, shards, seqLen))
   }
 
   private def stageOrAdoptPacked(spark: SparkSession, dir: String, fp: String,
@@ -4151,26 +4137,26 @@ object Pipeline {
     spark.read.parquet(dir).withColumn("shard", col("shard").cast("long"))
   }
 
-  private val stagedShardRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), String]()
-
-  /** Test probes (r17): memo entries held for `dir` across generations —
-    * the superseded-generation eviction keeps each at 1 (StalenessSpec).
+  /** q140's shard root per (dir, shards). An old generation's root can
+    * never be served again (its fingerprint can't recur), so superseding
+    * it deletes the directory: each regeneration would otherwise leak a
+    * full materialized shard corpus under tmpdir for the process lifetime
+    * (r16 review). CONCURRENCY CONTRACT (r16 advice 3): the delete is
+    * immediate, so a q140 still LAZILY executing against the old root in
+    * another thread can fail mid-scan on deleted files. In-place
+    * regeneration concurrent with in-flight queries is out of contract for
+    * every staged artifact here (the same race deletes live ANN codes via
+    * sweepAnnDebris and rewrites live bucketed tables); the failure mode is
+    * a loud FileNotFound on the superseded generation, never a wrong answer.
     */
-  private[graft] def stagedShardRootsFor(spark: SparkSession, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    stagedShardRoots.keySet.asScala.count(k =>
-      (k._1 eq spark) && k._2.startsWith(s"$dir@"))
-  }
-  private[graft] def learnedMergesEntriesFor(spark: SparkSession, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    learnedMerges.keySet.asScala.count(k =>
-      (k._1 eq spark) && k._2.startsWith(s"$dir@"))
-  }
-  private[graft] def stagedVideoEntriesFor(spark: SparkSession, dir: String): Int = {
-    import scala.jdk.CollectionConverters._
-    stagedVideos.keySet.asScala.count(k => (k._1 eq spark) && k._2 == dir)
-  }
+  private[graft] val stagedShardRoots = new graft.SourceMemo[(String, Int), String](root =>
+    scala.util.Try {
+      def rmr(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
+        f.delete(): Unit
+      }
+      rmr(new java.io.File(root))
+    }: Unit)
   /** Committed on-disk video corpora for `dir`'s CURRENT fingerprint (any
     * process) — cold-open observability for the warehouse-commit layout.
     * Counts ALL committed same-fp dirs (r18 advice: the Option-based
@@ -4212,44 +4198,16 @@ object Pipeline {
     * once per process and stay gate-correct under regeneration.
     */
   def q140(spark: SparkSession, dir: String, shards: Int = 8): DataFrame = {
-    // shards is part of the memo key: a later call with a different shard
-    // count must materialize its own corpus, not be served the first
+    // shards is part of the memo identity: a later call with a different
+    // shard count must materialize its own corpus, not be served the first
     // call's committed one via the writer's _SUCCESS no-op (r15 review).
-    // The source fingerprint is too: a dir regenerated MID-session gets a
-    // fresh root (the writer's committed-version no-op would otherwise
-    // serve the previous generation's corpus — r15 verdict item 3)
-    val srcKey = graft.Fingerprint.key(spark, dir, "documents.parquet")
-    // evict SUPERSEDED generations first: each regeneration would
-    // otherwise leak a full materialized shard corpus under tmpdir for
-    // the process lifetime (r16 review) — an old generation's root can
-    // never be served again (its fingerprint key can't recur), so its
-    // directory is reclaimable the moment a new generation appears.
-    // CONCURRENCY CONTRACT (r16 advice 3): the delete is immediate, so a
-    // q140 still LAZILY executing against the old root in another thread
-    // can fail mid-scan on deleted files. In-place regeneration concurrent
-    // with in-flight queries is out of contract for every staged artifact
-    // here (the same race deletes live ANN codes via sweepAnnDebris and
-    // rewrites live bucketed tables); the failure mode is a loud
-    // FileNotFound on the superseded generation, never a wrong answer.
-    locally {
-      import scala.jdk.CollectionConverters._
-      val stale = stagedShardRoots.entrySet.asScala.filter { e =>
-        (e.getKey._1 eq spark) && e.getKey._3 == shards &&
-          e.getKey._2 != srcKey && e.getKey._2.startsWith(s"$dir@")
-      }.toSeq
-      stale.foreach { e =>
-        stagedShardRoots.remove(e.getKey)
-        scala.util.Try {
-          def rmr(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-            f.delete(): Unit
-          }
-          rmr(new java.io.File(e.getValue))
-        }
-      }
-    }
-    val root = stagedShardRoots.computeIfAbsent((spark, srcKey, shards), _ =>
-      java.nio.file.Files.createTempDirectory("graft-shards").toString)
+    // The source fingerprint is the memo's generation: a dir regenerated
+    // MID-session gets a fresh root (the writer's committed-version no-op
+    // would otherwise serve the previous generation's corpus — r15
+    // verdict item 3)
+    val root = stagedShardRoots.get(spark, (dir, shards),
+      graft.Fingerprint.key(spark, dir, "documents.parquet"))(
+      _ => java.nio.file.Files.createTempDirectory("graft-shards").toString)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
@@ -4277,8 +4235,13 @@ object Pipeline {
     def cells: Int = cents.length
   }
 
-  private val stagedAnn = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.LazyCell[AnnIndex]]()
+  /** The staged index per dir. Superseding a generation releases its
+    * codes dir from the live set: the next staging's sweepAnnDebris skips
+    * LIVE paths, so this process's own stale codes would otherwise linger
+    * forever (r16 advice).
+    */
+  private[graft] val stagedAnn = new graft.SourceMemo[String, AnnIndex](idx =>
+    annLivePaths.remove(new org.apache.hadoop.fs.Path(idx.codesPath).getName): Unit)
 
   /** Process-unique component of staged-codes paths: scopes the stale-dir
     * sweep in [[stageAnnIndex]] to this process's own debris.
@@ -4490,31 +4453,12 @@ object Pipeline {
     * JVM or a fresh one) whose data still matches the committed
     * fingerprint ADOPTS the committed index — a metadata read, no
     * training — instead of re-staging; any fingerprint drift falls back
-    * to a fresh train-and-write. The memo holds [[LazyCell]]s so the
-    * ConcurrentHashMap bin lock is never held across a training run.
+    * to a fresh train-and-write. A THROWN staging leaves nothing in the
+    * memo, so isAnnIndexStaged never reports an index that was never
+    * built (r16 review).
     */
-  def stageAnnIndex(spark: SparkSession, dir: String): AnnIndex = {
-    val fp = annSourceFp(spark, dir)
-    // superseded-generation eviction (r16 advice): a regenerated dir's old
-    // memo cell (quantizer + codebook arrays) can never be requested again;
-    // its on-disk codes are reclaimed by the next staging's sweepAnnDebris —
-    // which skips LIVE paths, so eviction must release the superseded dir
-    // from the live set or this process's own stale codes linger forever
-    graft.Memo.evictSuperseded(stagedAnn,
-      (k: (SparkSession, String, String)) =>
-        (k._1 eq spark) && k._2 == dir && k._3 != fp,
-      (cell: graft.LazyCell[AnnIndex]) => if (cell.done) {
-        annLivePaths.remove(
-          new org.apache.hadoop.fs.Path(cell.value.codesPath).getName): Unit
-      })
-    val key = (spark, dir, fp)
-    // force-with-eviction: a THROWN staging must not leave its cell in
-    // the memo — isAnnIndexStaged would then report staged for an index
-    // that was never built, and the dispatcher's q16 staged form would
-    // re-run a full training implicitly during dispatch (r16 review)
-    graft.LazyCell.force(stagedAnn, key, stagedAnn.computeIfAbsent(key,
-      _ => new graft.LazyCell(stageOrAdoptAnn(spark, dir, fp))))
-  }
+  def stageAnnIndex(spark: SparkSession, dir: String): AnnIndex =
+    stagedAnn.get(spark, dir, annSourceFp(spark, dir))(fp => stageOrAdoptAnn(spark, dir, fp))
 
   private def stageOrAdoptAnn(spark: SparkSession, dir: String,
       fp: String): AnnIndex =
@@ -4624,10 +4568,8 @@ object Pipeline {
     * deterministic within a session; cold-open adoption happens on the
     * EXPLICIT calls ([[stageAnnIndex]], [[annSearchStaged]]).
     */
-  def isAnnIndexStaged(spark: SparkSession, dir: String): Boolean = {
-    val cell = stagedAnn.get((spark, dir, annSourceFp(spark, dir)))
-    cell != null && cell.done
-  }
+  def isAnnIndexStaged(spark: SparkSession, dir: String): Boolean =
+    stagedAnn.completed(spark, dir, annSourceFp(spark, dir))
 
   /** Committed index for `dir` at ANY fingerprint — the append path's
     * base discovery. When several committed bases exist (two processes
@@ -4726,16 +4668,14 @@ object Pipeline {
     * count is untouched (spec-pinned). Run [[compactAnnIndex]] when
     * accumulated deltas warrant a single merged base again.
     */
-  def appendAnnIndex(spark: SparkSession, dir: String): AnnIndex = {
-    val fp = annSourceFp(spark, dir)
-    val key = (spark, dir, fp)
-    val memo = stagedAnn.get(key)
-    if (memo != null) return graft.LazyCell.force(stagedAnn, key, memo)
+  def appendAnnIndex(spark: SparkSession, dir: String): AnnIndex =
+    stagedAnn.get(spark, dir, annSourceFp(spark, dir))(fp => adoptOrAppendAnn(spark, dir, fp))
+
+  private def adoptOrAppendAnn(spark: SparkSession, dir: String, fp: String): AnnIndex = {
     findCommittedAnn(spark, dir, fp) match {
       case Some(idx) => // already committed at this fingerprint: adopt
         annLivePaths.add(new org.apache.hadoop.fs.Path(idx.codesPath).getName)
-        return graft.LazyCell.force(stagedAnn, key,
-          stagedAnn.computeIfAbsent(key, _ => new graft.LazyCell(idx)))
+        return idx
       case None =>
     }
     val (_, base) = findCommittedAnnAnyFp(spark, dir).getOrElse(
@@ -4774,8 +4714,7 @@ object Pipeline {
     // flip adoption to the current fingerprint — THE append commit point
     writeAnnMeta(spark, base.codesPath, dir, fp, base.cents, base.cb)
     annLivePaths.add(name)
-    graft.LazyCell.force(stagedAnn, key,
-      stagedAnn.computeIfAbsent(key, _ => new graft.LazyCell(base)))
+    base
   }
 
   /** Default adopt-elsewhere grace before a retired (tombstoned) index
@@ -4838,10 +4777,7 @@ object Pipeline {
     }: Unit
     sweepAnnDebris(spark, wh, annDirKey(dir), fp)
     val merged = AnnIndex(path, idx.cents, idx.cb)
-    val key = (spark, dir, fp)
-    val cell = new graft.LazyCell[AnnIndex](merged)
-    val _ = cell.value // materialize so probes count it as done
-    stagedAnn.put(key, cell)
+    stagedAnn.put(spark, dir, fp, merged)
     merged
   }
 
@@ -4857,21 +4793,17 @@ object Pipeline {
     */
   def annSearchStaged(spark: SparkSession, dir: String, nprobe: Int,
       rerank: Int): DataFrame = {
-    val fp = annSourceFp(spark, dir)
-    val key = (spark, dir, fp)
-    val cell = stagedAnn.get(key)
-    val idx =
-      if (cell != null) graft.LazyCell.force(stagedAnn, key, cell)
-      else findCommittedAnn(spark, dir, fp) match {
+    val idx = stagedAnn.get(spark, dir, annSourceFp(spark, dir)) { fp =>
+      findCommittedAnn(spark, dir, fp) match {
         case Some(found) =>
           annLivePaths.add(new org.apache.hadoop.fs.Path(found.codesPath).getName)
-          graft.LazyCell.force(stagedAnn, key, stagedAnn.computeIfAbsent(key,
-            _ => new graft.LazyCell(found)))
+          found
         case None => throw new IllegalStateException(
           s"ANN index not staged for $dir in this session and no committed " +
           "index matches the data's current fingerprint — call " +
           "Pipeline.stageAnnIndex(spark, dir) first (staging is always explicit)")
       }
+    }
     // prepared-plan memo for the probe's two input frames (the inputCached
     // discipline — scan+projection/filter only, no Exchange): the staged
     // read path is the latency-facing API, and rebuilding these frames
@@ -5313,8 +5245,8 @@ object Pipeline {
     * data-dependent iterated argmax); the spec gates the ENCODER against
     * an independent reference apply at two SFs.
     */
-  private val learnedMerges = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), graft.LazyCell[Array[(String, String)]]]()
+  private[graft] val learnedMerges =
+    new graft.SourceMemo[(String, Int), Array[(String, String)]]()
 
   def q144(spark: SparkSession, dir: String, merges: Int = 12): DataFrame = {
     // train once per (session, corpus-fingerprint, merges) — the
@@ -5326,15 +5258,10 @@ object Pipeline {
     // Trains via [[bpeTrain]] (the incremental pair-delta trainer),
     // which is spec-pinned to emit q142's exact table — same artifact,
     // ~8x cheaper cold (r16a window: 0.35 s vs 3.5 s at sf0.1).
-    val key = (spark, graft.Fingerprint.key(spark, dir, "documents.parquet"), merges)
-    graft.Memo.evictSuperseded(learnedMerges,
-      (k: (SparkSession, String, Int)) =>
-        (k._1 eq spark) && k._3 == merges && k._2 != key._2 &&
-          k._2.startsWith(s"$dir@"))
-    val table = graft.LazyCell.force(learnedMerges, key,
-      learnedMerges.computeIfAbsent(key, _ =>
-        new graft.LazyCell(bpeTrain(spark, dir, merges).collect()
-          .map(r => (r.getString(1), r.getString(2))))))
+    val table = learnedMerges.get(spark, (dir, merges),
+      graft.Fingerprint.key(spark, dir, "documents.parquet")) { _ =>
+      bpeTrain(spark, dir, merges).collect().map(r => (r.getString(1), r.getString(2)))
+    }
     Tables.documents(spark, dir)
       .select(col("source"),
         length(col("text")).cast("long").as("n_chars"),

@@ -223,21 +223,22 @@ object Relational {
   /** Pay-once columnar build sides, memoized per (session, dir, kernel) —
     * the [[graft.Layouts]] discipline applied to the join kernels' build
     * maps: the reduced build relation of q105/q106/q109 (and q111's query
-    * vectors) is static per input dir, so the first call pays the build
-    * (and ships the broadcast) and every later call probes the SAME
-    * broadcast handle — the steady state a repeated-analytics deployment
-    * runs in, exactly as q92–q99 measure their post-staging state. The
-    * declarative twins keep paying their per-call builds, and the
-    * correctness gates hash-check EVERY call, cached build included.
-    * Sessions and testdata dirs are process-lived/immutable by the same
-    * contract as Tables.load.
+    * vectors) depends only on its `sources` files, so the first call pays
+    * the build (and ships the broadcast) and every later call probes the
+    * SAME broadcast handle — the steady state a repeated-analytics
+    * deployment runs in, exactly as q92–q99 measure their post-staging
+    * state. The declarative twins keep paying their per-call builds, and
+    * the correctness gates hash-check EVERY call, cached build included.
+    * The memo's generation is [[graft.Fingerprint.key]] of `sources`, so a
+    * source rewritten in place mid-session rebuilds instead of probing a
+    * stale map; a superseded broadcast is left to Spark's ContextCleaner.
     */
-  private val buildCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
+  private[graft] val buildCache = new graft.SourceMemo[(String, String), AnyRef]()
 
-  private def cachedBuild[T <: AnyRef](spark: SparkSession, dir: String, tag: String)(
-      mk: => T): T =
-    buildCache.computeIfAbsent((spark, dir, tag), _ => mk).asInstanceOf[T]
+  private def cachedBuild[T <: AnyRef](spark: SparkSession, dir: String, tag: String,
+      sources: String*)(mk: => T): T =
+    buildCache.get(spark, (dir, tag), graft.Fingerprint.key(spark, dir, sources: _*))(
+      _ => mk).asInstanceOf[T]
 
   /** [[q6]] global top-k on the columnar seam (driver-gated as q104 on
     * q6's oracle): a bounded candidate list per partition, merged and
@@ -346,7 +347,7 @@ object Relational {
     // against the declarative interval add).
     val ninetyDaysMicros = 90L * 86400000000L
     val bandB = cachedBuild[org.apache.spark.broadcast.Broadcast[graft.operators.LongAccMap]](
-        spark, dir, "q3band") {
+        spark, dir, "q3band", "orders.parquet") {
       val oScan = q3KernelBuild(spark, dir)
       requireBuildBounded(oScan, "q3ColumnarKernel")
       val (oBatches, oSchema) = graft.operators.ColumnarScan.batches(oScan)
@@ -590,7 +591,10 @@ object Relational {
     // The whole build (two probe jobs + broadcast) is pay-once cached —
     // see [[buildCache]].
     val (mapB, names) = cachedBuild[(org.apache.spark.broadcast.Broadcast[graft.operators.LongAccMap], Array[String])](
-        spark, dir, "q2oknation") { buildQ2OkToNation(spark, dir) }
+        spark, dir, "q2oknation",
+        "region.parquet", "nation.parquet", "customer.parquet", "orders.parquet") {
+      buildQ2OkToNation(spark, dir)
+    }
     val nNations = names.length
     val li = q2KernelProbe(spark, dir)
     val (batches, schema) = graft.operators.ColumnarScan.batches(li)
@@ -943,7 +947,7 @@ object Relational {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val mB = cachedBuild[org.apache.spark.broadcast.Broadcast[graft.operators.LongAccMap]](
-        spark, dir, "q4members") {
+        spark, dir, "q4members", "orders.parquet") {
       val o = q4KernelBuild(spark, dir)
       requireBuildBounded(o, "q4ColumnarKernel")
       val (oB, oSch) = graft.operators.ColumnarScan.batches(o)

@@ -265,8 +265,8 @@ object TextVec {
     * preserves them exactly for corpora with fewer than 5 scorable
     * candidates. Bounded everywhere: 10 queries × (5 + 5) per partition.
     */
-  private val q16QueryCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[Long], Array[Array[Float]], Array[Double])]()
+  private[graft] val q16QueryCache =
+    new graft.SourceMemo[String, (Array[Long], Array[Array[Float]], Array[Double])]()
 
   def q16ColumnarKernel(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Row
@@ -274,10 +274,11 @@ object TextVec {
     val k = 5
     // query side: same rows q16 broadcasts, collected with their norms
     // computed in the kernel's own double order (== FloatVecNorm's);
-    // pay-once cached per (session, dir) — the Relational.buildCache /
-    // Layouts discipline (testdata dirs are immutable, sessions
-    // process-lived; correctness gates hash-check every call regardless)
-    val (qids, qvecs, qnorms) = q16QueryCache.computeIfAbsent((spark, dir), { _ =>
+    // pay-once cached per (session, dir) and fingerprinted on the one
+    // file it reads — the Relational.buildCache / Layouts discipline
+    // (correctness gates hash-check every call regardless)
+    val (qids, qvecs, qnorms) = q16QueryCache.get(spark, dir,
+        graft.Fingerprint.key(spark, dir, "embeddings.parquet")) { _ =>
       val qRows = q16QueryFrame(spark, dir).collect()
       val ids = qRows.map(_.getLong(0))
       val vecs: Array[Array[Float]] = qRows.map { r =>
@@ -292,7 +293,7 @@ object TextVec {
         }
       }
       (ids, vecs, norms)
-    })
+    }
     val qNull: Array[Boolean] = qvecs.map(_ == null)
     val nq = qids.length
     val proj = q16KernelInput(spark, dir)

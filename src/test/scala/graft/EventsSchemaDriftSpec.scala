@@ -172,7 +172,7 @@ class EventsSchemaDriftSpec extends SparkSpec {
     writeNanos(2L, rows = 2)
     assert(Tables.events(caller, dir).select("event_id").head().getLong(0) == 2L,
       "regenerated NANOS file must be re-read, not served from the stale clone")
-    assert(Tables.cloneEntriesFor(caller, dir) == 1,
+    assert(Tables.clones.entriesFor(caller)(_._1 == dir) == 1,
       "superseded NANOS-clone generations must be evicted from the Tables memo")
   }
 

@@ -90,14 +90,18 @@ class ExecSpec extends SparkSpec {
     assert(want.head.getLong(0) === 2L)
   }
 
-  test("registry forms are ordered by the recorded medians; declarative twin last") {
-    for ((q, forms) <- Exec.registry) {
-      val meds = forms.init.map(f =>
-        Exec.recordedMedianSec.getOrElse(f.name, Double.MaxValue))
-      assert(meds === meds.sorted, s"$q forms out of recorded-median order")
-      assert(forms.last.name === q,
-        s"$q: the declarative twin must stay last regardless of its median")
-    }
+  test("registry forms keep their written order; declarative twin last") {
+    val kernelFirst = Seq("q1", "q3", "q4", "q6", "q7", "q9a", "q10", "q11", "q14", "q17")
+      .map(q => q -> Seq(s"${q}ColumnarKernel", q))
+    val layoutFirst = Seq("q12", "q13").map(q => q -> Seq(s"${q}FromColumnarSortedKernel", q)) ++
+      Seq("q21", "q51", "q70", "q71").map(q => q -> Seq(s"${q}FromSortedKernel", q))
+    val want = (kernelFirst ++ layoutFirst ++ Seq(
+      "q2" -> Seq("q2ColumnarKernel", "q2FromFacts(bucketed)", "q2"),
+      "q5" -> Seq("q5ColumnarKernel", "q5From(bucketed)", "q5"),
+      "q16" -> Seq("q16ColumnarKernel", "q16AnnStagedExact", "q16"))).toMap
+    assert(Exec.registry.map { case (q, forms) => q -> forms.map(_.name) } === want)
+    for ((q, forms) <- Exec.registry)
+      assert(forms.last.name === q, s"$q: the declarative twin must stay last")
   }
 
   test("runFamily stages the shared layout once, then routes the whole family to kernels") {

@@ -249,6 +249,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ivfTrain/pqTrain driver-local Lloyd == forced-distributed path, bit-identical (r20)") {
+    import spark.implicits._
     // the r20 bounded fast path collects the (already bounded, persisted)
     // training sample once and folds the SAME IvfProbes/PqEncode row
     // kernels locally; fixed-point long component sums are commutative,
@@ -283,6 +284,38 @@ class PipelineSpec extends SparkSpec {
         Pipeline.q88(spark, sf001).collect().toSeq
       } finally spark.conf.unset("graft.ann.maxDriverTrainRows")
     assert(outLocal == outDist, "q88 output diverged between training paths")
+    // adversarial inputs, each through both paths
+    def forcedDistributed[T](train: => T): T =
+      try {
+        spark.conf.set("graft.ann.maxDriverTrainRows", "0")
+        train
+      } finally spark.conf.unset("graft.ann.maxDriverTrainRows")
+    // a null ELEMENT inside one vector: the local path declines (no driver
+    // NPE) and training runs distributed
+    val nullElem = emb.withColumn("embedding", when(col("vec_id") === 7L,
+      transform(col("embedding"), (x, i) => when(i === 0, lit(null).cast("float")).otherwise(x)))
+      .otherwise(col("embedding")))
+    val (nullSample, nn) = Pipeline.annTrainSample(nullElem, trainStride = 0L)
+    try assert(Pipeline.annCollectLocal(nullSample, nn).isEmpty,
+      "a null vector element must send the sample to the distributed path")
+    finally nullSample.unpersist()
+    assert(bitsC(Pipeline.ivfTrain(nullElem)) == bitsC(forcedDistributed(Pipeline.ivfTrain(nullElem))))
+    // an empty vector (at a non-seed rank): it contributes no component on
+    // either path
+    val maxId = emb.agg(max("vec_id")).head().getLong(0)
+    val withEmpty = emb.select("vec_id", "embedding").union(spark.range(1)
+      .select(lit(maxId + 1).as("vec_id"), array().cast("array<float>").as("embedding")))
+    assert(bitsC(Pipeline.ivfTrain(withEmpty)) == bitsC(forcedDistributed(Pipeline.ivfTrain(withEmpty))))
+    assert(bitsB(Pipeline.pqTrain(withEmpty)) == bitsB(forcedDistributed(Pipeline.pqTrain(withEmpty))))
+    // a corpus where the empty row is the LAST member of its cell: cell 0
+    // (where an all-zero score lands) loses every real row by round 3, so
+    // only the empty row could mark it seen
+    val tiny = Seq((0L, Seq(-0.33f, 0.2f)), (1L, Seq(0.97f, -0.53f)), (2L, Seq(-0.24f, 0.11f)),
+      (3L, Seq(0.09f, 0.04f)), (4L, Seq(-0.44f, -0.81f)), (5L, Seq(0.9f, 0.08f)),
+      (6L, Seq.empty[Float])).toDF("vec_id", "embedding")
+    assert(bitsC(Pipeline.ivfTrain(tiny, k = 3)) ==
+      bitsC(forcedDistributed(Pipeline.ivfTrain(tiny, k = 3))),
+      "an empty row must not keep its cell's centroid from holding")
   }
 
   test("ANN training default bounds the sample when the corpus exceeds the bound") {

@@ -13,6 +13,29 @@ class StalenessSpec extends SparkSpec {
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-stale-$tag").toString
 
+  /** A private copy of the sf0.001 tables: a distinct dir is a distinct
+    * memo identity, so nothing an earlier spec cached can mask staleness.
+    */
+  private def sf0001Copy(tag: String): String = {
+    val dir = tmpDir(tag)
+    for (t <- Tables.names)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf0001/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    dir
+  }
+
+  /** Rewrite `table` in place with `f` applied — collected first, so the
+    * overwrite never reads the path it replaces.
+    */
+  private def rewrite(dir: String, table: String)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val df = f(spark.read.parquet(s"$dir/$table.parquet"))
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      .write.mode("overwrite").parquet(s"$dir/$table.parquet")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+
   test("Fingerprint: rewrite changes it, absence is distinct, key composes per file") {
     import spark.implicits._
     val dir = tmpDir("fp")
@@ -71,7 +94,7 @@ class StalenessSpec extends SparkSpec {
     Seq((1L, "v3")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Tables.load(spark, dir, "orders").collect()
-    assert(Tables.memoEntriesFor(spark, s"$dir/orders.parquet") === 1,
+    assert(Tables.memo.entriesFor(spark)(_ == s"$dir/orders.parquet") === 1,
       "superseded generations must be evicted from the Tables memo")
   }
 
@@ -89,7 +112,7 @@ class StalenessSpec extends SparkSpec {
     val f = cached()
     assert(builds === 2, "regeneration must rebuild the prepared plan")
     assert(f.collect().map(_.getInt(0)).toSeq === Seq(2))
-    assert(graft.operators.ColumnarScan.inputMemoEntriesFor(spark, dir, "stale-spec") === 1,
+    assert(graft.operators.ColumnarScan.inputMemo.entriesFor(spark)(_ == ((dir, "stale-spec"))) === 1,
       "superseded generations must be evicted from the prepared-scan memo")
   }
 
@@ -109,7 +132,7 @@ class StalenessSpec extends SparkSpec {
     val out = Pipeline.q144(spark, dir, merges = 2).collect()
     assert(out.map(_.getLong(4)).sum === 3L,
       "regenerated corpus must be re-trained, not encoded with the stale table")
-    assert(Pipeline.learnedMergesEntriesFor(spark, dir) === 1,
+    assert(Pipeline.learnedMerges.entriesFor(spark)(_._1 == dir) === 1,
       "superseded generations must be evicted from the merge-table memo")
   }
 
@@ -124,7 +147,7 @@ class StalenessSpec extends SparkSpec {
     writeDocs(5)
     assert(Pipeline.q140(spark, dir).collect().map(_.getLong(1)).sum === 5L,
       "the committed-version no-op must not serve the previous generation")
-    assert(Pipeline.stagedShardRootsFor(spark, dir) === 1,
+    assert(Pipeline.stagedShardRoots.entriesFor(spark)(_._1 == dir) === 1,
       "the superseded generation's shard root must be evicted (and deleted)")
   }
 
@@ -143,7 +166,7 @@ class StalenessSpec extends SparkSpec {
     val g2 = Pipeline.q148(spark, dir).collect().map(_.getLong(0)).toSeq
     assert(g2 === Seq(7L),
       "regenerated corpus must re-stage the video containers")
-    assert(Pipeline.stagedVideoEntriesFor(spark, dir) === 1,
+    assert(Pipeline.stagedVideos.entriesFor(spark)(_ == dir) === 1,
       "the superseded generation's video root must be evicted")
   }
 
@@ -158,7 +181,7 @@ class StalenessSpec extends SparkSpec {
     writeDocs(Seq((7L, "s", "x"), (8L, "s", "y"), (9L, "s", "z")))
     assert(Pipeline.q153(spark, dir).collect().map(_.getLong(2)).sum === 3L,
       "the committed-version no-op must not serve the previous generation")
-    assert(Pipeline.stagedPackedRootsFor(spark, dir) === 1,
+    assert(Pipeline.stagedPacked.entriesFor(spark)(_._1 == dir) === 1,
       "the superseded generation's packed root must be evicted")
     assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 1,
       "the superseded generation's warehouse dir must be swept by the re-staging")
@@ -301,7 +324,50 @@ class StalenessSpec extends SparkSpec {
     // an explicit re-stage serves the NEW generation
     val re = Layouts.eventsByUserCached(spark, dir, buckets = 2)
     assert(re.select("user_id").collect().map(_.getLong(0)).toSeq === Seq(2L))
-    assert(Layouts.stagedEventsEntriesFor(spark, dir) === 1,
+    assert(Layouts.eventsLayout.memo.entriesFor(spark)(_._1 == dir) === 1,
       "the superseded generation's staged-events cell must be evicted")
+  }
+
+  test("Exec q2 kernel rebuilds its dimension map after nation.parquet is rewritten in place") {
+    val dir = sf0001Copy("q2")
+    assert(Exec.runNamed(spark, dir, "q2")._1 === "q2ColumnarKernel")
+    rewrite(dir, "nation")(_.withColumn("n_name", concat(lit("X_"), col("n_name"))))
+    val (form, got) = Exec.runNamed(spark, dir, "q2")
+    assert(form === "q2ColumnarKernel")
+    val want = rowsOf(graft.queries.Relational.q2(spark, dir))
+    assert(want.nonEmpty && want.forall(_.getString(0).startsWith("X_")))
+    assert(rowsOf(got) === want, "the kernel must not probe the stale nation map")
+    assert(graft.queries.Relational.buildCache.entriesFor(spark)(_ == ((dir, "q2oknation"))) === 1)
+  }
+
+  test("Exec q16 kernel re-reads its query vectors after embeddings.parquet is rewritten in place") {
+    val dir = sf0001Copy("q16")
+    assert(Exec.runNamed(spark, dir, "q16")._1 === "q16ColumnarKernel")
+    // reverse the query-side vectors only: the corpus side is unchanged,
+    // so a stale query cache scores the new corpus with the old queries
+    rewrite(dir, "embeddings")(_.withColumn("embedding",
+      when(col("vec_id") < 10, reverse(col("embedding"))).otherwise(col("embedding"))))
+    val (form, got) = Exec.runNamed(spark, dir, "q16")
+    assert(form === "q16ColumnarKernel")
+    assert(rowsOf(got) === rowsOf(graft.queries.TextVec.q16(spark, dir)),
+      "the kernel must not score with the stale query vectors")
+    assert(graft.queries.TextVec.q16QueryCache.entriesFor(spark)(_ == dir) === 1)
+  }
+
+  test("Exec q3/q4 kernels rebuild their orders maps after orders.parquet is rewritten in place") {
+    val dir = sf0001Copy("q3q4")
+    assert(Exec.runNamed(spark, dir, "q3")._1 === "q3ColumnarKernel")
+    assert(Exec.runNamed(spark, dir, "q4")._1 === "q4ColumnarKernel")
+    // keep a third of the orders: fewer band matches for q3, fewer
+    // ordering customers for q4
+    rewrite(dir, "orders")(_.filter(col("o_orderkey") % 3 === 0))
+    for (q <- Seq("q3", "q4")) {
+      val (form, got) = Exec.runNamed(spark, dir, q)
+      assert(form === s"${q}ColumnarKernel")
+      assert(rowsOf(got) === rowsOf(Exec.registry(q).last.run(spark, dir)),
+        s"$q must not probe the stale orders map")
+    }
+    for (tag <- Seq("q3band", "q4members"))
+      assert(graft.queries.Relational.buildCache.entriesFor(spark)(_ == ((dir, tag))) === 1)
   }
 }
