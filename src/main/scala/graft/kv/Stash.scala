@@ -83,7 +83,16 @@ final class Stash private (val entities: Dataset[Entity]) {
 
   /** Persist. With buckets > 0, lay out hash-bucketed-by-key files so a
     * reopened stash co-locates each key range (the biggie hex-address
-    * fanout, done by Spark's hash partitioner).
+    * fanout). A key's bucket is `pmod(hash(key), buckets)` — the Murmur3
+    * partition id of Spark's hash partitioner — and file i holds exactly
+    * the keys whose bucket is i, whatever `spark.sql.shuffle.partitions`
+    * or AQE is set to. `repartition(buckets, key)` cannot promise that:
+    * when the plan is already hash-partitioned on key into `buckets`
+    * partitions (keyedUpsert's window does so when shuffle.partitions ==
+    * buckets), the planner drops it as redundant, and AQE then coalesces
+    * the window's own shuffle into one file holding every bucket. The
+    * partition-id shuffle of `repartitionById` is never dropped or
+    * coalesced.
     *
     * Every file carries a parquet BLOOM FILTER on `key` (r12 verdict: the
     * point-lookup index footer min/max stats cannot be): keys hash-scatter
@@ -102,7 +111,7 @@ final class Stash private (val entities: Dataset[Entity]) {
     */
   def save(path: String, buckets: Int = 0, bloomNdv: Long = 100000L): Unit = {
     val w = if (buckets > 0)
-      entities.repartition(buckets, col("key")).write
+      entities.repartitionById(buckets, pmod(hash(col("key")), lit(buckets))).write
     else entities.write
     w.option("parquet.bloom.filter.enabled#key", "true")
       .option("parquet.bloom.filter.expected.ndv#key", bloomNdv.toString)

@@ -100,6 +100,31 @@ class StashSpec extends SparkSpec {
     assert(st.get("nope") === None)
   }
 
+  test("save(buckets) keeps one file per bucket when shuffle.partitions == buckets") {
+    import org.apache.spark.sql.functions.{col, collect_set, hash, lit, pmod}
+    // with equal counts the upsert window already hash-partitions on key
+    // into `buckets` partitions: a `repartition(buckets, key)` is then
+    // planned away and AQE may coalesce the store into a single file
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try {
+      val dir = Files.createTempDirectory("stash-layout").toString + "/st"
+      Stash.fromEntities(spark, (1 to 200).map(i => e(s"k$i", i.toDouble)))
+        .save(dir, buckets = 4)
+      val files = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted.toSeq
+      assert(files.size === 4, s"one file per bucket, got $files")
+      val byFile = spark.read.parquet(dir)
+        .groupBy(col("_metadata.file_name").as("f"))
+        .agg(collect_set(pmod(hash(col("key")), lit(4))).as("b"))
+        .collect().map(r => r.getString(0) -> r.getSeq[Int](1).toSet).toMap
+      files.zipWithIndex.foreach { case (f, i) =>
+        assert(byFile(f) === Set(i), s"$f must hold exactly bucket $i")
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
   test("dynamic per-entity fields: heterogeneous maps coexist") {
     val a = Entity("a", tensors = Map("cqt" -> Array(1.0)), shapes = Map("cqt" -> Array(1)))
     val b = Entity("b", scalars = Map("tempo" -> 120.0))
