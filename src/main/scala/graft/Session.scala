@@ -53,20 +53,18 @@ object Session {
       // hash mode holds at realistic group counts; past it the sort
       // fallback remains as the memory safety valve.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Scan-split sizing for the LOCAL test SFs (r17, measured): the
-      // testdata files are 2-10 MB, so Spark's 128 MB default makes every
-      // non-bucketed scan a SINGLE task and leaves cores idle in the scan
-      // stage; 1 MB splits + a 128 KB open cost parallelize the fact scans
-      // ~8-10-way (q1 -25%, q2 -18%, q3 -13%, q7 -14% at sf0.1) while the
-      // open cost keeps KB-sized dims at one split. Results are unaffected
-      // by construction: every aggregate here is fixed-point/integer and
-      // partition-count independent (the determinism discipline), and
-      // bucketed-table scans ignore this knob (one partition per bucket).
-      // At PRODUCTION data sizes pass maxPartitionBytes = 128 MB (Spark's
-      // default) or larger — the parameter exists (r17 advice) so a user
-      // pointing this entry point at GB-scale files isn't stuck with
-      // thousands of scan partitions per file; the default stays sized
-      // for the 2-10 MB test SFs this factory is documented for.
+      // Scan-split sizing: 1 MB splits with a 128 KB open cost. A split
+      // never subdivides a parquet row group, and every sf0.1 table file
+      // holds exactly one (lineitem: 600k rows in one group), so the extra
+      // splits are empty tasks, not parallelism: lineitem plans 11 scan
+      // tasks of which one reads rows, and an 8-file bucketed kv store
+      // plans 24 per point scan. Kernel q1-q17 medians measured within
+      // noise at 1 MB and at 128 MB splits on a 4-core host. Results do
+      // not depend on the split count: every aggregate here is fixed-point
+      // or integer and partition-count independent, and bucketed-table
+      // scans ignore this knob (one partition per bucket). At production
+      // sizes pass maxPartitionBytes = 128 MB (Spark's default) or larger,
+      // so GB-scale files do not plan thousands of scan partitions each.
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
       .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
       // Pin the catalog to in-memory: with Hive jars on the classpath a

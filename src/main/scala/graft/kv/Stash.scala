@@ -1,7 +1,33 @@
 package graft.kv
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter.{ColumnPredicates, ColumnRecordFilter}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.api.InitContext
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.{MessageType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.types.{MapType, StructType}
+
+import graft.Fingerprint
 
 /** A biggie-style entity: a keyed record of named tensor fields (value +
   * shape, row-major), scalar fields, string fields, and integer fields
@@ -26,27 +52,46 @@ case class Entity(
   * HDF5 Stash (biggie/sources.py [public-repo]).
   *
   * Design mapping (SURVEY.md §2.1):
-  *  - keymap + hex-address fanout  → hash partitioning / bucketBy on key;
-  *    point lookups prune via parquet predicate pushdown on `key`
+  *  - keymap (key → address)         → [[Stash.KeyIndex]]: an opened
+  *    stash maps key → (data file, row group) from the files' `key`
+  *    column, and `get` reads that one row group on the driver, no job
+  *  - hex-address fanout             → hash-bucketed files (`save`)
   *  - LazyField column-at-a-time I/O → Catalyst column pruning (free)
-  *  - cache=True                   → Dataset.persist
-  *  - close()/flush durability     → atomic Parquet write commit (strictly
+  *  - cache=True                     → Dataset.persist
+  *  - close()/flush durability       → atomic Parquet write commit (strictly
   *    stronger than biggie's write-keymap-on-close, which loses data on
   *    crash before close)
   *
   * The API is immutable/functional: mutators return a new Stash whose plan
   * contains the change; `save` materializes. At 100 TB, `save(path, n)`
   * writes hash-bucketed files so later point reads touch one bucket.
+  * Removals are held as a key set and planned as one `NOT key IN (...)`
+  * filter when the rows are first needed, so a run of `remove` calls does
+  * not grow a chain of Datasets that Spark re-analyses on every call.
   */
-final class Stash private (val entities: Dataset[Entity]) {
+final class Stash private (
+    base: Dataset[Entity],
+    removed: Set[String],
+    index: Option[Stash.KeyIndex]) {
   import Stash.keyedUpsert
 
-  private def spark: SparkSession = entities.sparkSession
-  import entities.sparkSession.implicits._
+  private def this(base: Dataset[Entity]) = this(base, Set.empty, None)
 
-  /** Point lookup — pushes `key = k` into the scan (bucket/row-group prune). */
+  private def spark: SparkSession = base.sparkSession
+  import base.sparkSession.implicits._
+
+  /** The stash's rows: `base` without the pending removals. */
+  lazy val entities: Dataset[Entity] =
+    if (removed.isEmpty) base else base.filter(!col("key").isin(removed.toSeq: _*))
+
+  /** Point lookup. A removed key misses with no I/O; an opened stash with
+    * no writes since `open` answers from its keymap; any other stash runs
+    * a `key = k` scan (bucket/row-group prune).
+    */
   def get(key: String): Option[Entity] =
-    entities.filter(col("key") === key).limit(1).collect().headOption
+    if (removed(key)) None
+    else index.flatMap(_.get(spark, key))
+      .getOrElse(entities.filter(col("key") === key).limit(1).collect().headOption)
 
   /** Insert an entity; error if the key exists unless overwrite=true
     * (matches biggie `Stash.add(key, entity, overwrite=False)` semantics).
@@ -62,8 +107,7 @@ final class Stash private (val entities: Dataset[Entity]) {
     */
   def addAll(batch: Dataset[Entity]): Stash = new Stash(keyedUpsert(entities, batch))
 
-  def remove(key: String): Stash =
-    new Stash(entities.filter(col("key") =!= key))
+  def remove(key: String): Stash = new Stash(base, removed + key, index)
 
   def keys: DataFrame = entities.select("key")
 
@@ -98,10 +142,12 @@ final class Stash private (val entities: Dataset[Entity]) {
     * point-lookup index footer min/max stats cannot be): keys hash-scatter
     * across the key space, so row-group min/max ranges overlap and prune
     * nothing — the bloom filter rejects a non-matching row group in O(1),
-    * which is what makes `get` on a 100 TB store "one bucket file, skip
-    * every row group but the hit's". `bloomNdv` is per ROW GROUP (not per
-    * store); the 100k default ≈ 120 KB of filter per group at the
-    * format's default fpp — negligible next to the group itself. SIZE IT
+    * which is what makes a `key = k` scan on a 100 TB store "one bucket
+    * file, skip every row group but the hit's" (the `get` path of a stash
+    * with writes since `open`, or of a store too big for the keymap).
+    * `bloomNdv` is per ROW GROUP (not per store); the 100k default ≈
+    * 120 KB of filter per group at the format's default fpp — negligible
+    * next to the group itself. SIZE IT
     * to your expected distinct keys per row group: a filter sized for
     * 100k holding millions of tiny-entity keys saturates (fpp → 1) and
     * stops pruning. The format also caps one filter at
@@ -126,24 +172,179 @@ object Stash {
     new Stash(spark.emptyDataset[Entity])
   }
 
-  def open(spark: SparkSession, path: String): Stash = {
+  def open(spark: SparkSession, path: String): Stash =
+    open(spark, path, Runtime.getRuntime.maxMemory / KeymapHeapShare)
+
+  /** The keymap holds a key column's worth of strings on the driver: a
+    * store whose key-column bytes exceed this share of the max heap keeps
+    * the scan for `get`. A JVM string plus its map entry is a few times
+    * its column bytes, so 1/64 keeps the keymap under a tenth of the heap.
+    */
+  private val KeymapHeapShare = 64
+
+  private[kv] def open(spark: SparkSession, path: String, keymapBudget: Long): Stash = {
     import spark.implicits._
     // Schema evolution: a stash written before an Entity field existed (e.g.
     // `longs`) must still open — backfill missing columns with empty maps so
     // the typed encoder never sees a null field.
-    val enc = implicitly[org.apache.spark.sql.Encoder[Entity]]
     var df = spark.read.parquet(path)
-    enc.schema.foreach { f =>
+    entitySchema.foreach { f =>
       if (!df.columns.contains(f.name)) {
         val fill = f.dataType match {
-          case _: org.apache.spark.sql.types.MapType =>
-            map_from_arrays(array(), array()).cast(f.dataType)
+          case _: MapType => map_from_arrays(array(), array()).cast(f.dataType)
           case dt => lit(null).cast(dt)
         }
         df = df.withColumn(f.name, fill)
       }
     }
-    new Stash(df.as[Entity])
+    new Stash(df.as[Entity], Set.empty, Some(new KeyIndex(path, keymapBudget)))
+  }
+
+  private lazy val entityEncoder = ExpressionEncoder[Entity]()
+  private def entitySchema: StructType = entityEncoder.schema
+
+  /** The keymap of an opened store: key → (data file, row group), read
+    * from the `key` column of the store directory's own parquet files on
+    * the first `get` and rebuilt whenever the directory's
+    * [[graft.Fingerprint]] moves. It lives as long as the stash that
+    * opened it, so a store's dead versions take their keymaps with them.
+    */
+  private[kv] final class KeyIndex(dir: String, budget: Long) {
+    private var built: (String, Option[Keymap]) = null
+
+    /** `Some(answer)` from the keymap, or `None` when this store cannot be
+      * keymapped (over budget, not a flat directory of files).
+      */
+    def get(spark: SparkSession, key: String): Option[Option[Entity]] = synchronized {
+      val fp = Fingerprint.of(spark, dir)
+      if (built == null || built._1 != fp) built = (fp, Keymap.build(spark, dir, budget))
+      built._2.map(_.get(key))
+    }
+  }
+
+  private final class Keymap(
+      conf: Configuration,
+      groups: IndexedSeq[(Path, Int)],
+      at: mutable.HashMap[String, Int]) {
+    private val decode = entityEncoder.resolveAndBind().createDeserializer()
+
+    /** Reads the key's row group on the driver, filtered to `key = k`,
+      * through Spark's own parquet row converter and the Entity encoder.
+      */
+    def get(key: String): Option[Entity] = at.get(key).flatMap { i =>
+      val (file, group) = groups(i)
+      val reader = Keymap.openFile(file, conf)
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        val fileSchema = meta.getSchema
+        val support = new ParquetReadSupport(None, false,
+          RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+        val ctx = support.init(new InitContext(conf,
+          meta.getKeyValueMetaData.asScala.map { case (k, v) => k -> Set(v).asJava }.asJava,
+          fileSchema))
+        reader.setRequestedSchema(ctx.getRequestedSchema)
+        val pages = reader.readRowGroup(group)
+        val rows = new ColumnIOFactory(meta.getCreatedBy)
+          .getColumnIO(ctx.getRequestedSchema, fileSchema, true)
+          .getRecordReader(pages,
+            support.prepareForRead(conf, meta.getKeyValueMetaData, fileSchema, ctx),
+            // this filter skips the other columns of a non-matching row
+            // undecoded; the first matching row or null
+            FilterCompat.get(ColumnRecordFilter.column("key", ColumnPredicates.equalTo(key))))
+        Option(rows.read()).map { row =>
+          // open's backfill, for the columns this file does not have
+          val fields = entitySchema.fields
+          decode(new GenericInternalRow(Array.tabulate[Any](fields.length) { j =>
+            val f = fields(j)
+            if (fileSchema.containsField(f.name)) row.get(j, f.dataType)
+            else f.dataType match {
+              case _: MapType => new ArrayBasedMapData(
+                new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
+              case _ => null
+            }
+          }))
+        }
+      } finally reader.close()
+    }
+  }
+
+  private object Keymap {
+
+    /** Reads only the `key` column chunks. `None` when `dir` is not a flat
+      * directory of parquet files with a `key` column, or when the key
+      * columns' bytes (summed from the footers) exceed `budget`.
+      */
+    def build(spark: SparkSession, dir: String, budget: Long): Option[Keymap] = {
+      val conf = spark.sessionState.newHadoopConf()
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, entitySchema.json)
+      // the flags Spark's parquet scan sets for its row converter
+      Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+        SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
+        .foreach(e => conf.setBoolean(e.key, spark.sessionState.conf.getConf(e)))
+      val root = new Path(dir)
+      val fs = root.getFileSystem(conf)
+      if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return None
+      // Spark's own rule for the files a directory read skips
+      val listed = fs.listStatus(root).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+      }
+      if (listed.exists(_.isDirectory)) return None
+      val files = listed.map(_.getPath).sortBy(_.getName)
+      val footers = files.map { f =>
+        val r = openFile(f, conf)
+        try r.getFooter finally r.close()
+      }
+      val keyBytes = footers.map(keyColumnBytes)
+      if (keyBytes.exists(_.isEmpty) || keyBytes.flatten.sum > budget) return None
+      val groups = mutable.ArrayBuffer.empty[(Path, Int)]
+      val at = mutable.HashMap.empty[String, Int]
+      files.foreach { f =>
+        val r = openFile(f, conf)
+        try {
+          val meta = r.getFooter.getFileMetaData
+          val keySchema = new MessageType(meta.getSchema.getName, keyField(meta.getSchema))
+          val col = keySchema.getColumns.get(0)
+          r.setRequestedSchema(keySchema)
+          r.getFooter.getBlocks.asScala.indices.foreach { g =>
+            val pages = r.readRowGroup(g)
+            val keys = new ColumnReadStoreImpl(pages,
+              new GroupRecordConverter(keySchema).getRootConverter, keySchema, meta.getCreatedBy)
+              .getColumnReader(col)
+            var n = 0L
+            while (n < keys.getTotalValueCount) {
+              // the first row group holding a key answers it, as a scan's limit(1) may
+              if (keys.getCurrentDefinitionLevel == col.getMaxDefinitionLevel)
+                at.getOrElseUpdate(keys.getBinary.toStringUsingUTF8, groups.size)
+              keys.consume()
+              n += 1
+            }
+            groups += f -> g
+          }
+        } finally r.close()
+      }
+      Some(new Keymap(conf, groups.toIndexedSeq, at))
+    }
+
+    /** Opens a data file with read options from `conf`: the options'
+      * no-argument default loads a fresh Hadoop Configuration (~15 ms).
+      */
+    def openFile(f: Path, conf: Configuration): ParquetFileReader =
+      ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+        HadoopReadOptions.builder(conf, f).build())
+
+    private def keyField(s: MessageType): Type = s.getType(s.getFieldIndex("key"))
+
+    /** Bytes of a file's `key` column, if it has a string key column. */
+    private def keyColumnBytes(m: ParquetMetadata): Option[Long] = {
+      val s = m.getFileMetaData.getSchema
+      val binaryKey = s.containsField("key") && keyField(s).isPrimitive &&
+        keyField(s).asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY
+      if (!binaryKey) None
+      else Some(m.getBlocks.asScala.iterator.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == "key").map(_.getTotalUncompressedSize).sum)
+    }
   }
 
   def fromEntities(spark: SparkSession, es: Seq[Entity]): Stash = {

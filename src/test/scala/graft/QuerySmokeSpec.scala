@@ -27,12 +27,25 @@ class QuerySmokeSpec extends SparkSpec {
     // shared-JVM getOrCreate path: runtime confs land on the existing
     // session and registerViews wires the tables (the fresh-JVM
     // construction path incl. extensions is driven via spark-shell in the
-    // verify recipe — extensions cannot attach through getOrCreate)
-    val s = graft.Session.localWithViews(sf0001)
-    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
-    assert(s.sql("SELECT count(*) FROM documents").head().getLong(0) > 0)
-    assert(s.sql("SELECT count(*) FROM events").head().getLong(0) > 0)
+    // verify recipe — extensions cannot attach through getOrCreate).
+    // Those confs land on the session every spec shares, so put back the
+    // runtime confs as they were, or later specs run under other settings
+    // than they do alone.
+    val before = spark.conf.getAll
+    try {
+      val s = graft.Session.localWithViews(sf0001)
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(s.sql("SELECT count(*) FROM documents").head().getLong(0) > 0)
+      assert(s.sql("SELECT count(*) FROM events").head().getLong(0) > 0)
+    } finally {
+      spark.conf.getAll.keys.filter(spark.conf.isModifiable).foreach { k =>
+        before.get(k) match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        }
+      }
+    }
   }
 
   test("q51 funnel stages are monotonically non-increasing") {

@@ -188,4 +188,145 @@ class StashSpec extends SparkSpec {
     val bare = java.nio.file.Files.createTempDirectory("stashcomp-empty").toString
     assert(Stash.compactLatest(spark, bare, buckets = 2) == -1L)
   }
+
+  // ---- the keymap point read ----------------------------------------------
+
+  /** Entities with every field kind, some maps empty, some fields absent. */
+  private def mixed(n: Int, tag: Double = 0.0): Seq[Entity] = {
+    val rng = new scala.util.Random(n)
+    (1 to n).map { i =>
+      val len = 1 + rng.nextInt(40)
+      Entity(f"k$i%04d",
+        tensors = if (i % 7 == 0) Map.empty
+          else Map("x" -> Array.fill(len)(rng.nextGaussian() + tag), "y" -> Array(i.toDouble)),
+        shapes = if (i % 7 == 0) Map.empty else Map("x" -> Array(len), "y" -> Array(1)),
+        scalars = Map("s" -> (i + tag)),
+        strings = if (i % 3 == 0) Map.empty else Map("label" -> s"l-$i"),
+        longs = Map("id" -> (Long.MaxValue - i)))
+    }
+  }
+
+  /** An entity as comparable values (arrays by content). */
+  private def canon(e: Entity) = (e.key, e.tensors.view.mapValues(_.toSeq).toMap,
+    e.shapes.view.mapValues(_.toSeq).toMap, e.scalars, e.strings, e.longs)
+
+  /** `get` equals the stash's own scan for every key it holds, every key
+    * in `alsoAsk`, and 50 misses. The scan is collected once: its row for
+    * k is what `scan().filter(key === k)` returns.
+    */
+  private def assertGetsMatchScan(st: Stash, alsoAsk: Seq[String] = Nil): Unit = {
+    val want = st.scan().collect().map(e => e.key -> canon(e)).toMap
+    val asked = want.keys.toSeq ++ alsoAsk ++ (1 to 50).map(i => s"miss-$i")
+    asked.foreach(k => assert(st.get(k).map(canon) === want.get(k), s"key $k"))
+  }
+
+  /** Spark jobs the current thread starts while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later marker job has been
+      // seen, every job `body` started has been seen too
+      sc.setJobGroup(s"$group-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30000000000L
+      while (!seen.contains(s"$group-marker") && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$group-marker"), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tmp(name: String) = Files.createTempDirectory(name).toString
+
+  test("keymap get equals the scan: bucketed, unbucketed, compacted, no-longs, pending removes") {
+    import spark.implicits._
+    val es = mixed(240)
+    val bucketed = tmp("km-b") + "/st"
+    Stash.fromEntities(spark, es).save(bucketed, buckets = 8)
+    val b = Stash.open(spark, bucketed)
+    assertGetsMatchScan(b)
+    // pending removes answer from the removal set, on the same keymap
+    val removed = es.map(_.key).filter(_.endsWith("3"))
+    assertGetsMatchScan(removed.foldLeft(b)(_.remove(_)), alsoAsk = removed)
+
+    val flat = tmp("km-u") + "/st"
+    Stash.fromEntities(spark, es).save(flat)
+    assertGetsMatchScan(Stash.open(spark, flat))
+
+    val root = tmp("km-c")
+    Stash.fromEntities(spark, es.take(100)).save(s"$root/v0")
+    assert(Stash.compactLatest(spark, root, buckets = 3) == 1L)
+    assertGetsMatchScan(Stash.openLatest(spark, root)._1)
+
+    // a store written before `longs` existed: open's backfill applies
+    val old = tmp("km-o") + "/st"
+    spark.createDataset(es.take(60)).drop("longs").write.parquet(old)
+    val o = Stash.open(spark, old)
+    assert(o.get("k0001").get.longs.isEmpty)
+    assertGetsMatchScan(o)
+  }
+
+  test("get on an opened store starts no Spark job; over the keymap budget it scans") {
+    val dir = tmp("km-jobs") + "/st"
+    Stash.fromEntities(spark, mixed(80)).save(dir, buckets = 8)
+    val st = Stash.open(spark, dir)
+    val keys = Seq("k0001", "k0040", "k0080", "absent")
+    assert(jobsDuring(keys.foreach(st.get)) === 0)
+    // a budget below the key column's bytes keeps the scan, same answers
+    val scanned = Stash.open(spark, dir, keymapBudget = 0L)
+    assert(jobsDuring(scanned.get("k0040")) > 0)
+    keys.foreach(k => assert(scanned.get(k).map(canon) === st.get(k).map(canon), s"key $k"))
+  }
+
+  test("a data file rewritten in place after open is not answered from the old keymap") {
+    import java.nio.file.{Paths, StandardCopyOption}
+    val dir = tmp("km-rw") + "/st"
+    val other = tmp("km-rw2") + "/st"
+    Stash.fromEntities(spark, mixed(30)).save(dir, buckets = 1)
+    // same keys but k0001 dropped and k0099 added, every value moved
+    Stash.fromEntities(spark,
+      mixed(30, tag = 5.0).drop(1) :+ Entity("k0099", scalars = Map("s" -> 99.0)))
+      .save(other, buckets = 1)
+    val st = Stash.open(spark, dir)
+    assert(st.get("k0001").isDefined && st.get("k0099").isEmpty)
+    def part(d: String) = new java.io.File(d).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq match {
+        case Seq(f) => f
+        case fs => fail(s"one data file expected in $d, got $fs")
+      }
+    val (from, to) = (part(other), part(dir))
+    Files.copy(Paths.get(other, from), Paths.get(dir, to), StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(Paths.get(other, s".$from.crc"), Paths.get(dir, s".$to.crc"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val fresh = Stash.open(spark, dir).scan().collect().map(e => e.key -> canon(e)).toMap
+    assert(fresh.contains("k0099") && !fresh.contains("k0001"))
+    Seq("k0001", "k0002", "k0030", "k0099").foreach { k =>
+      assert(st.get(k).map(canon) === fresh.get(k), s"key $k")
+    }
+  }
+
+  test("remove then addAll re-inserts the key; addAll then remove deletes it") {
+    import spark.implicits._
+    val dir = tmp("km-ra") + "/st"
+    Stash.fromEntities(spark, mixed(20)).save(dir, buckets = 2)
+    val st = Stash.open(spark, dir)
+    val back = st.remove("k0001").addAll(spark.createDataset(Seq(e("k0001", 42))))
+    assert(back.get("k0001").map(_.tensors("x").toSeq) === Some(Seq(42.0)))
+    assert(back.count() == 20)
+    val gone = st.addAll(spark.createDataset(Seq(e("k0002", 7), e("new", 8)))).remove("k0002")
+    assert(gone.get("k0002").isEmpty)
+    assert(gone.get("new").isDefined)
+    assert(gone.count() == 20)
+    assert(!gone.keys.collect().map(_.getString(0)).contains("k0002"))
+  }
 }
