@@ -263,7 +263,7 @@ object Exec {
     * them is staged ONCE up front — explicitly and logged, the one
     * deliberate exception to "the dispatcher never stages" (the caller's
     * batch request IS the opt-in; the amortization math is the layout's
-    * whole point, tools/bench_bucketed_latest.json) — and every query
+    * whole point, tools/bench_bucketed_latest.json@ec375fe) — and every query
     * then routes through [[runNamed]] as usual. Layouts below the
     * threshold are left unstaged: one query never justifies a staging job
     * it could have run declaratively. Returns (query, chosenForm, result)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Pay-once physical layouts for repeated analytics — the deployment
-  * story measured in tools/bench_bucketed_latest.json and documented in
+  * story measured in tools/bench_bucketed_latest.json@ec375fe and documented in
   * docs/DEPLOY.md, packaged as one-call staging so a user gets the
   * layout the numbers were recorded on, not a hand-rolled variant that
   * silently misses a precondition.
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions.col
   * against the staged table plan with ZERO exchange on the bucket key
   * and ZERO sort where their order requirement is a prefix of the
   * layout's — the per-query shuffle+sort is pre-paid at write time and
-  * amortizes across the query family (amortization counts are in the
-  * bench artifact). At cluster scale the same code holds: bucketed
+  * amortizes across the query family (amortization counts are in that
+  * artifact). At cluster scale the same code holds: bucketed
   * saveAsTable is Hive-layout-compatible, and the scan-side guarantees
   * are per-file, not per-executor.
   *
@@ -121,9 +121,9 @@ object Layouts {
 
   /** One pay-once staged layout: the source files its staging reads, and
     * the staging itself, given the bucket count and the digest suffix
-    * its warehouse table names carry (dir digest + bucket count, so
-    * multi-SF sessions — the bench's slope mode — never alias two
-    * datasets onto one table).
+    * its warehouse table names carry (dir digest + bucket count, so a
+    * session that stages two dirs — as the specs do with sf0.001 and
+    * sf0.01 — never aliases two datasets onto one table).
     *
     * [[cached]] stages once per (session, dir, buckets) and returns the
     * staged table on every later call — the amortization the layout

@@ -121,7 +121,8 @@ object SparkEntry {
     // q70/q71: the kernels must HASH-MATCH them, making the layout path
     // driver-gated, not just spec-gated. Timed runs measure the
     // post-staging steady state; the stage-once cost is recorded
-    // separately (tools/bench_bucketed_latest.json, amortization counts).
+    // separately (tools/bench_bucketed_latest.json@ec375fe, amortization
+    // counts).
     "q92_kernel_session"  -> ((s, d) => Events.q12FromSortedKernel(Layouts.eventsByUserCached(s, d))),
     "q93_kernel_lag"      -> ((s, d) => Events.q13FromSortedKernel(Layouts.eventsByUserCached(s, d))),
     "q94_kernel_asof"     -> ((s, d) => Events.q21FromSortedKernel(Layouts.eventsByUserCached(s, d))),
@@ -220,7 +221,7 @@ object SparkEntry {
     // operating point (probe all cells, re-rank everything == exact q16) —
     // hash-pins the cell-partitioned codes layout + staged probe against
     // q16's oracle. Staging is memoized per session (the Layouts
-    // discipline); Bench pre-stages it outside all timed regions.
+    // discipline), so a caller timing repeated runs pays it once.
     "q136_layout_ann" -> ((s, d) => Pipeline.q136(s, d)),
     // q137: q135's hot-bucket form — distributed two-pass rank instead of
     // one per-bucket window, identical output by construction (shares

@@ -87,8 +87,8 @@ object Tables {
     * holds at execution re-planning no matter which session runs the
     * action — per-read set/unset on the caller's session would NOT be safe
     * (the conf is consulted again at scan execution, not just at schema
-    * inference). Engine-owned sessions (Bench/Verify/Session) still set it
-    * at build time and take the LongType branch directly.
+    * inference). Engine-owned sessions (Session.local, which Verify uses)
+    * set it at build time and take the LongType branch directly.
     * EventsSchemaDriftSpec proves the caller-session conf stays untouched.
     *
     * CONF-FREEZE CONTRACT (r11 advice): the clone copies the caller's
@@ -160,8 +160,8 @@ object Tables {
     * AnalysisExceptions downstream. Motivated by the round-7/8 incident: a
     * silent testdata regeneration flipped events.ts TIMESTAMP(NANOS) →
     * TIMESTAMP(MICROS) and took out every events-derived query; this probe
-    * makes the next such drift fail loudly in one place. Bench and Verify
-    * call it at startup.
+    * makes the next such drift fail loudly in one place. Verify calls it
+    * at startup.
     */
   def probeSchemas(s: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.types._

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -17,10 +16,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *     from the artifact alone.
   *  3. Any throw outside the per-query loop lands in `verify_error.txt`
   *     in outDir — the artifact can be empty of results but never silent.
-  *  4. The session pins `spark.sql.catalogImplementation=in-memory`: with
-  *     Hive jars on the classpath, a hive catalog boots embedded Derby in
-  *     user.dir, and Derby allows ONE JVM — a concurrent graft process
-  *     (or a lingering shell) would kill getOrCreate before any query ran.
+  *  4. The session is [[Session.local]], so it carries the engine's
+  *     contract confs, the in-memory catalog among them: with Hive jars on
+  *     the classpath, a hive catalog boots embedded Derby in user.dir, and
+  *     Derby allows ONE JVM — a concurrent graft process (or a lingering
+  *     shell) would kill getOrCreate before any query ran.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -66,23 +66,11 @@ object Verify {
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     try {
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-        // typed-Aggregator hash mode past 128 groups/task — see Session.local
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-        // 1 MB scan splits (see Session.local) — the gate then ALSO
-        // exercises result parity under multi-partition scans, which the
-        // engine's fixed-point determinism discipline promises
-        .config("spark.sql.files.maxPartitionBytes", (1024 * 1024).toString)
-        .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.catalogImplementation", "in-memory")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      // Session.local's 1 MB scan splits make the gate ALSO exercise result
+      // parity under multi-partition scans, which the engine's fixed-point
+      // determinism discipline promises
+      val spark = Session.local(cpus.toInt, withExtensions = false)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       Tables.probeSchemas(spark, sfDir) // fail loudly on testdata schema drift
       SparkEntry.queries
         .filter { case (name, _) => subset.forall(_.contains(name)) }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * query families, every remaining >2× marginal vs the DuckDB baseline was
   * decomposed to either (a) the bare scan+agg constant (q11 — the whole
   * marginal IS `ColumnarToRowExec` + codegen'd per-row agg consume,
-  * tools/bench_q11_decomp_latest.json) or (b) a single operator's per-row
+  * tools/bench_q11_decomp_latest.json@ec375fe) or (b) a single operator's per-row
   * JVM cost (q12's interval agg, q13's WindowExec). Plan-level work is
   * exhausted: those plans already have zero avoidable exchanges, pruned
   * scans, and whole-stage codegen. The only structure left ABOVE the plan

@@ -10,7 +10,7 @@ import scala.reflect.ClassTag
   * (r16 verdict item 3: the measured post-memo dispatch remainder was the
   * aggregate job itself).
   *
-  * Measured at sf0.1 warm (tools/bench_dispatch_decomp_latest.json): the
+  * Measured at sf0.1 warm (tools/bench_dispatch_decomp_latest.json@ec375fe): the
   * q9a kernel's `treeAggregate(depth = 2)` finale cost 111 ms where the
   * identical fold as ONE `runJob` stage + driver merge cost 43 ms — the
   * tree's intermediate shuffle stage is a full extra dispatch round

@@ -242,7 +242,7 @@ object Events {
 
   /** Q11 tumbling daily window. Under the engine's UTC-session contract
     * (every engine-owned session pins `spark.sql.session.timeZone=UTC` —
-    * Session/Bench/Verify/specs), a 1-day tumbling window with the default
+    * Session/Verify/specs), a 1-day tumbling window with the default
     * origin is EXACTLY `date_trunc('day', ts)` — same UTC boundaries, same
     * groups — so the hot path groups by the primitive date key instead of
     * the `window()` STRUCT key (measured r11: the struct group key cost
@@ -285,8 +285,8 @@ object Events {
     * the [[graft.operators.ColumnarScan]] seam, attacking the one cost the
     * r12 decomposition proved is q11's ENTIRE remaining marginal vs the
     * oracle: the vectorized-reader→row boundary
-    * (tools/bench_q11_decomp_latest.json — bare scan-agg ≡ full q11 within
-    * residuals; "only a different scan boundary moves this family").
+    * (tools/bench_q11_decomp_latest.json@ec375fe — bare scan-agg ≡ full
+    * q11 within residuals; "only a different scan boundary moves this family").
     *
     * Semantics are q11's, re-derived from raw scan columns:
     *  - day: `to_date(date_trunc('day', ts))` under the UTC-session
@@ -431,7 +431,7 @@ object Events {
     q12From(Tables.events(spark, dir))
 
   /** [[q12]] over any events-shaped frame — the seam the pay-once bucketed
-    * layout enters through (BenchBucketed/BucketedJoinSpec feed the
+    * layout enters through (Layouts/BucketedJoinSpec feed the
     * user_id-bucketed table here; on it the groupBy runs as ONE
     * exchange-free aggregation stage).
     */
@@ -483,7 +483,8 @@ object Events {
   /** [[q13]] over any events-shaped frame. On the user_id-bucketed,
     * (user_id, ts, event_id)-sorted layout the lag Window sits DIRECTLY on
     * the scan — no exchange, no sort (the r11 verdict's documented
-    * sort-floor, pre-paid at write time); measured in BenchBucketed.
+    * sort-floor, pre-paid at write time); measured in
+    * tools/bench_bucketed_latest.json@ec375fe.
     * [[q13FromSortedKernel]] goes one step further on that layout and
     * removes WindowExec itself.
     */
@@ -510,7 +511,7 @@ object Events {
     * with zero exchange and zero sort, yet WindowExec still buffers every
     * row through its frame machinery (row container + bound evaluation per
     * row) just to hand back the previous ts — measured at ~3× the bare
-    * scan cost (tools/bench_weak_decomp_latest.json: the operator term is
+    * scan cost (tools/bench_weak_decomp_latest.json@ec375fe: the operator term is
     * ~100% of q13's marginal). With the order guaranteed by the layout,
     * the lag is two locals in a forward scan: this kernel reads the
     * codegen'd projection's rows directly (the [[graft.functions.LrGradient]]
@@ -521,7 +522,7 @@ object Events {
     * Exactness: gap sums are integer micros (order-independent); the final
     * reduction replays [[q13From]]'s double ops in the same order
     * (sum → cast double → /1e6 → /count), so results hash-match — pinned
-    * by row-parity asserts in BucketedJoinSpec and BenchBucketed.
+    * by row-parity asserts in BucketedJoinSpec.
     *
     * Scale: one map stage over the bucketed scan + a shuffle of
     * |partitions|×|event types| 24-byte partial rows. The same shape a
@@ -1265,9 +1266,9 @@ object Events {
     * bucketing pre-paid it), and — when the query's order requirement is a
     * prefix of the layout's (user_id, ts, event_id) sort — no Sort node
     * touches user_id either (the sortBy pre-paid that too). ONE definition
-    * shared by BenchBucketed and BucketedJoinSpec so the recorded numbers
-    * and the spec can never gate different plans (the ivfadc-gate
-    * pattern).
+    * that BucketedJoinSpec calls, so the spec gates the plan the recorded
+    * numbers (tools/bench_bucketed_latest.json@ec375fe) were measured on
+    * (the ivfadc-gate pattern).
     *
     * `allowUserIdSort` covers q70's shape: its window runs over the
     * POST-distinct user-bounded rows whose scan order is destroyed by the

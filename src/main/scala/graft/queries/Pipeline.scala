@@ -338,7 +338,7 @@ object Pipeline {
     * which pins the machinery; recall at partial probing on THIS isotropic
     * corpus carries the same information-theoretic caveat as q29. The
     * default sits on the measured sweep knee (r14 verdict item 4,
-    * tools/bench_ann_sweep.json): nprobe=8 reads recall 0.80 at sf0.1 —
+    * tools/bench_ann_sweep.json@ec375fe): nprobe=8 reads recall 0.80 at sf0.1 —
     * nprobe=4's 0.62 undersold the machinery, and 16 is the exact limit.
     * Index+query are bucket equi-joins — the sub-linear scale path.
     */
@@ -667,19 +667,19 @@ object Pipeline {
     * for the shortlist. Probing all cells AND re-ranking everything
     * reproduces exact q16 verbatim (spec) — both approximations are
     * independently lossless-at-the-limit dials. Default operating point
-    * (8, 400), on the r15 sweep knee (tools/bench_ann_sweep.json): recall
+    * (8, 400), on the r15 sweep knee (tools/bench_ann_sweep.json@ec375fe): recall
     * 0.80 at sf0.1 with BOTH axes still genuinely approximate (8 of 16
     * cells probed, 400-candidate re-rank); the earlier (4, 200) point's
     * 0.62 was capped by nprobe=4's probe-set ceiling, and (16, 200) only
     * reaches 0.86 by giving up cell pruning entirely. The re-rank stays
     * |queries|×rerank exact dots, O(1) per corpus size.
     */
-  /** q88's deployment operating point (the r14 sweep knee), named ONCE:
-    * BenchBucketed's staged-vs-inline parity gate and the cold-open probe
-    * compare at exactly this point. r17 found BenchBucketed still pinned
-    * to the pre-r14 (4, 200) — its parity `require` had been failing
-    * silently-unrun since the default moved; a shared constant makes the
-    * next default change incapable of diverging the gate.
+  /** q88's deployment operating point (the r14 sweep knee), named ONCE so
+    * a staged-vs-inline parity check compares at exactly this point. r17
+    * found the retired bucketed bench still pinned to the pre-r14
+    * (4, 200) — its parity `require` had been failing silently-unrun since
+    * the default moved; a shared constant makes the next default change
+    * incapable of diverging such a gate.
     */
   val AnnNprobe = 8
   val AnnRerank = 400
@@ -718,8 +718,8 @@ object Pipeline {
     * m bytes of PQ codes per vector. At deployment this is what gets
     * STAGED, partitioned by `bkt`, so a probe's scan extent is its
     * `nprobe` cells' files (partition pruning), not the corpus —
-    * [[graft.BenchBucketed]] records that number and BucketedJoinSpec
-    * gates the plan.
+    * tools/bench_bucketed_latest.json@ec375fe records that number and
+    * BucketedJoinSpec gates the plan.
     */
   private[graft] def ivfadcIndex(emb: DataFrame, cents: Array[Array[Double]],
       cb: Array[Array[Array[Double]]]): DataFrame =
@@ -736,12 +736,6 @@ object Pipeline {
     queries.select(explode(PipelineExprs.ivfProbes(col("qv"), cents, nprobe)).as("p"))
       .distinct().collect().map(_.getInt(0)).sorted
 
-  /** [[ivfadcProbe]] over a STAGED cell-partitioned codes table: the scan
-    * reads only the probed cells' files (partition pruning on `bkt`).
-    * ONE definition shared by the deployment bench (BenchBucketed) and
-    * its plan-shape spec (BucketedJoinSpec) so they can never gate
-    * different constructions.
-    */
   /** The staged codes RELATION: the committed base (cell-partitioned
     * files under `codesPath`) plus every committed incremental-append
     * delta (`codesPath/_delta/batch=N`, the [[graft.streaming.BatchStore]]
@@ -769,6 +763,12 @@ object Pipeline {
     }
   }
 
+  /** [[ivfadcProbe]] over a STAGED cell-partitioned codes table: the scan
+    * reads only the probed cells' files (partition pruning on `bkt`).
+    * ONE definition shared by [[annSearchStaged]] (q136's path) and its
+    * plan-shape spec (BucketedJoinSpec) so they can never gate different
+    * constructions.
+    */
   private[graft] def ivfadcStagedProbe(spark: SparkSession, codesPath: String,
       emb: DataFrame, queries: DataFrame, cents: Array[Array[Double]],
       cb: Array[Array[Array[Double]]], nprobe: Int, rerank: Int): DataFrame = {

@@ -1079,9 +1079,9 @@ object Relational {
   }
 
   /** ONE definition of the orderkey fact-layout's plan gate (the
-    * custkeyLayoutGateViolations pattern), shared by BenchBucketed and
-    * BucketedJoinSpec: the bucketed fact join must not re-exchange either
-    * fact side on its orderkey.
+    * custkeyLayoutGateViolations pattern), called by BucketedJoinSpec:
+    * the bucketed fact join must not re-exchange either fact side on its
+    * orderkey.
     */
   private[graft] def orderkeyLayoutGateViolations(plan: String): Seq[String] = {
     val ex = plan.linesIterator.count(l =>
@@ -1230,8 +1230,8 @@ object Relational {
 
   /** [[q5]] over any orders-shaped frame — the pay-once layout seam: on an
     * o_custkey-bucketed orders table the heap aggregation runs PARTIAL-ONLY
-    * (one exchange-free stage), measured in BenchBucketed next to the q2
-    * and events layouts.
+    * (one exchange-free stage), measured next to the q2 and events layouts
+    * (tools/bench_bucketed_latest.json@ec375fe).
     */
   def q5From(o: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -1250,11 +1250,10 @@ object Relational {
       .limit(100)
   }
 
-  /** ONE definition of the o_custkey pay-once layout's plan gate, shared
-    * by BenchBucketed and BucketedJoinSpec (the userIdLayoutGateViolations
-    * pattern): the bucketed q5 must not re-exchange on o_custkey. A gate
-    * duplicated at each call site can drift and silently check different
-    * plans.
+  /** ONE definition of the o_custkey pay-once layout's plan gate, called
+    * by BucketedJoinSpec (the userIdLayoutGateViolations pattern): the
+    * bucketed q5 must not re-exchange on o_custkey. A gate duplicated at
+    * each call site can drift and silently check different plans.
     */
   private[graft] def custkeyLayoutGateViolations(plan: String): Seq[String] = {
     val ex = plan.linesIterator.count(l =>

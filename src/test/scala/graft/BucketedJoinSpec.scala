@@ -49,10 +49,10 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("IVFADC probe over cell-partitioned codes: partition-pruned scan, no codes-side exchange, inline parity") {
     // the deployment layout q88's scaladoc claims, gated as a plan shape
-    // (BenchBucketed records the numbers at sf0.1): codes staged
-    // partitioned by cell -> a probe reads only its nprobe cells' files
-    // and the codes side never exchanges; the staged result must equal
-    // the inline q88 rows exactly
+    // (tools/bench_bucketed_latest.json@ec375fe has the sf0.1 numbers):
+    // codes staged partitioned by cell -> a probe reads only its nprobe
+    // cells' files and the codes side never exchanges; the staged result
+    // must equal the inline q88 rows exactly
     import graft.queries.Pipeline
     import graft.expressions.TextVecExprs
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfadc").toString
@@ -82,9 +82,9 @@ class BucketedJoinSpec extends SparkSpec {
     // the r11-verdict pay-once layout for the weak list's sort floor:
     // events bucketed by user_id, sorted within buckets by (user_id, ts,
     // event_id) — exactly the clustering+order the whole q12/q13/q21/q51/
-    // q70/q71 family requires. Gates shared with BenchBucketed via
+    // q70/q71 family requires. The gate is
     // Events.userIdLayoutGateViolations (numbers live in
-    // tools/bench_bucketed_latest.json).
+    // tools/bench_bucketed_latest.json@ec375fe).
     import graft.queries.Events
     val orderingWas = spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
     val autoScanWas = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")

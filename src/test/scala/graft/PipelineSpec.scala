@@ -419,10 +419,11 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & ann).size.toDouble / exact.size
     info(f"IVF recall = $recall%.2f (${(exact & ann).size}/${exact.size})")
-    // nprobe=8 sits on the measured sweep knee (tools/bench_ann_sweep.json:
-    // recall 0.80 at sf0.1, 0.82 here); training is layout-deterministic,
-    // so for FIXED testdata this is a constant — the 0.75 gate leaves one
-    // flipped neighbor of margin against a driver testdata regeneration
+    // nprobe=8 sits on the measured sweep knee (recall 0.80 at sf0.1 in
+    // tools/bench_ann_sweep.json@ec375fe, 0.82 here); training is
+    // layout-deterministic, so for FIXED testdata this is a constant — the
+    // 0.75 gate leaves one flipped neighbor of margin against a driver
+    // testdata regeneration
     assert(recall >= 0.75, f"recall $recall%.2f below 0.75")
   }
 

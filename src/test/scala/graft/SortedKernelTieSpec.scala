@@ -7,8 +7,8 @@ import graft.queries.Events
 /** Tie-semantics pins for the sorted-layout kernels.
   *
   * The driver testdata contains ZERO per-user timestamp ties (checked at
-  * all three SFs), so the SF-level parity gates in BucketedJoinSpec /
-  * BenchBucketed never exercise the tie paths: q21's same-ts candidate
+  * all three SFs), so the SF-level parity gates in BucketedJoinSpec
+  * never exercise the tie paths: q21's same-ts candidate
   * slot, q13/q71's event_id attribution order, q51's strict-`>` stage
   * boundaries, q12's exactly-at-the-gap edge. This spec crafts a frame
   * where every one of those edges occurs, pins the DECLARATIVE answers by
