@@ -17,25 +17,13 @@ import org.apache.spark.sql.SparkSession
   * (isAnnIndexStaged, Layouts' staged-layout probes) must count only
   * cells whose staging COMPLETED — a thrown staging leaves the cell in the
   * map until its forcing caller evicts it, and a probe that counted it
-  * would route dispatch onto a layout that was never built. Callers force
-  * values through [[force]], which evicts the cell on failure so the next
-  * explicit call retries cleanly.
+  * would route dispatch onto a layout that was never built.
+  * [[SourceMemo]] is the one holder of cells; it evicts a cell whose
+  * value threw, so the next explicit call retries cleanly.
   */
 private[graft] final class LazyCell[T](thunk: => T) {
   @volatile var done: Boolean = false
   lazy val value: T = { val v = thunk; done = true; v }
-}
-
-private[graft] object LazyCell {
-
-  /** Force `cell.value`; on failure remove it from `map` (only if still
-    * this exact cell) so a failed staging never poisons the memo — the
-    * pre-LazyCell behavior, where a throw inside computeIfAbsent left no
-    * mapping behind.
-    */
-  def force[K, T](map: ConcurrentHashMap[K, LazyCell[T]], key: K, cell: LazyCell[T]): T =
-    try cell.value
-    catch { case e: Throwable => map.remove(key, cell); throw e }
 }
 
 /** The engine's one pay-once session memo, and the one place the

@@ -2501,23 +2501,16 @@ object Pipeline {
     * ship in this container). Oracle recomputes everything from doc_id
     * and text (PNG gray lossless + integer pixel math).
     */
+  /** The video corpus's warehouse dirs, `g_videos_<md5(dir)>_<fp>_…`. */
+  private[graft] val videoDirs = new graft.WarehouseArtifact("videos")
+
   /** Committed video-corpus path per dir. Superseding a generation
     * releases its dir from the live set (it can never be adopted again),
     * so the NEXT staging's sweep reclaims its disk — deletion deferred to
     * staging time, never done on the read path.
     */
   private[graft] val stagedVideos = new graft.SourceMemo[String, String](
-    path => videoLivePaths.remove(new org.apache.hadoop.fs.Path(path).getName): Unit)
-
-  /** Directory names this process is writing / has staged-or-adopted —
-    * the same sweep-scoping sets the staged-ANN layout keeps (a sibling
-    * staging mid-write must never be swept; other processes' dirs are
-    * never touched).
-    */
-  private val videoInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val videoLivePaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    path => videoDirs.release(path))
 
   /** Actual synthesis WRITES this process performed — spec observability
     * for the cold-open/adoption contract (adopting a committed corpus
@@ -2528,61 +2521,6 @@ object Pipeline {
   private def videoSourceFp(spark: SparkSession, dir: String): String =
     graft.Fingerprint.of(spark, s"$dir/documents.parquet")
 
-  /** Committed video-corpus dir for (dir, fp) under the warehouse — any
-    * process's, deterministic pick (lexicographically smallest name). The
-    * source fingerprint is IN the directory name, so the parquet
-    * committer's own `_SUCCESS` is a sufficient commit marker (unlike the
-    * ANN layout, there is no sidecar state needing a separate meta
-    * commit): a marker paired with a previous data generation can never
-    * match the current fingerprint, so a regenerated dir always re-stages.
-    */
-  private def committedVideoDirs(spark: SparkSession, dir: String,
-      fp: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) return Nil
-    val prefix = s"g_videos_${annDirKey(dir)}_${fp}_"
-    fs.listStatus(whPath).map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).sorted.toSeq
-      .filter(name => fs.exists(new org.apache.hadoop.fs.Path(s"$wh/$name/_SUCCESS")))
-      .map(name => s"$wh/$name")
-  }
-
-  private def findCommittedVideos(spark: SparkSession, dir: String,
-      fp: String): Option[String] =
-    committedVideoDirs(spark, dir, fp).headOption
-
-  /** Reclaim THIS process's own dead video stagings for `dir`: dirs
-    * carrying this process's tag that are neither live nor mid-write, and
-    * are either uncommitted (throw-debris — this closes the r17 temp-dir
-    * leak, where a staging that died after creating its directory leaked
-    * it for the machine lifetime) or committed against a STALE fingerprint
-    * (superseded by a regeneration; adoption can never pick them again).
-    * QUIESCE NOTE (r17 verdict item 5): a same-process query planned
-    * against a stale-generation corpus and still running when the sweep
-    * fires would lose its scan mid-flight; queries spanning an in-place
-    * testdata regeneration are OUT OF CONTRACT for every staging in this
-    * file (the regeneration already invalidated their inputs) — the sweep
-    * runs only inside an explicit (re-)staging, never on the read path.
-    */
-  private def sweepVideoDebris(spark: SparkSession, wh: String, dir: String,
-      fp: String): Unit =
-    scala.util.Try {
-      val whPath = new org.apache.hadoop.fs.Path(wh)
-      val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(whPath)) fs.listStatus(whPath).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(s"g_videos_${annDirKey(dir)}_") &&
-            n.contains(s"_${processTag}_") &&
-            !videoLivePaths.contains(n) && !videoInFlight.contains(n)) {
-          val committed = fs.exists(new org.apache.hadoop.fs.Path(s"$wh/$n/_SUCCESS"))
-          val stale = !n.startsWith(s"g_videos_${annDirKey(dir)}_${fp}_")
-          if (!committed || stale) fs.delete(st.getPath, true)
-        }
-      }
-    }
-
   /** The deterministic fake video corpus, MATERIALIZED once per (session,
     * dir, corpus fingerprint) as a `(doc_id, video binary)` parquet
     * relation — the shape a real multimodal pipeline actually has
@@ -2592,10 +2530,11 @@ object Pipeline {
     * strided decode), not the synthesis.
     *
     * r18 (verdict item 3): the corpus commits under the session WAREHOUSE
-    * with the fingerprint in the directory name — the stageAnnIndex
-    * layout — instead of a per-generation temp dir. Pay-once now spans
-    * processes (a later JVM whose documents still match the committed
-    * fingerprint ADOPTS the corpus instead of re-synthesizing), crash
+    * with the fingerprint in the directory name — a
+    * [[graft.WarehouseArtifact]] family, like the staged ANN index —
+    * instead of a per-generation temp dir. Pay-once now spans processes
+    * (a later JVM whose documents still match the committed fingerprint
+    * ADOPTS the corpus instead of re-synthesizing), crash
     * debris is reclaimed by the next staging's sweep instead of leaking
     * for the machine lifetime, and superseded generations are deleted by
     * the sweep rather than by memo-eviction cleanup (which missed cells
@@ -2608,32 +2547,12 @@ object Pipeline {
   }
 
   private def stageOrAdoptVideos(spark: SparkSession, dir: String,
-      fp: String): String = {
-    import spark.implicits._
-    findCommittedVideos(spark, dir, fp) match {
-      case Some(p) =>
-        videoLivePaths.add(new org.apache.hadoop.fs.Path(p).getName)
-        // adopt is also a staging point: without this, a process whose
-        // every later generation is adopted (another process staged it
-        // first) never reclaims its own superseded dirs (r18 review)
-        sweepVideoDebris(spark, spark.conf.get("spark.sql.warehouse.dir"), dir, fp)
-        p
-      case None =>
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val name = s"g_videos_${annDirKey(dir)}_${fp}_${processTag}_" +
-          java.util.UUID.randomUUID.toString.take(8)
-        val out = s"$wh/$name"
-        videoInFlight.add(name)
-        try {
-          sweepVideoDebris(spark, wh, dir, fp)
-          videoStagings.incrementAndGet()
-          synthesizeVideos(spark, dir)
-            .write.mode("overwrite").parquet(out) // _SUCCESS is the commit
-          videoLivePaths.add(name)
-          out
-        } finally videoInFlight.remove(name)
+      fp: String): String =
+    videoDirs.stageOrAdopt(spark, dir, fp) { out =>
+      videoStagings.incrementAndGet()
+      synthesizeVideos(spark, dir)
+        .write.mode("overwrite").parquet(out) // _SUCCESS is the commit
     }
-  }
 
   /** The synthesis pass (the decode-stub discipline: only the MEDIA is
     * fake — deterministic from doc_id and text; the framing, batch seam
@@ -3427,81 +3346,32 @@ object Pipeline {
   }
 
   // ---- packed corpus as a shared warehouse layout (r19, r18 verdict
-  // item 4): the videoContainers pattern applied to packing. A packed
-  // corpus commits ONCE per (corpus fingerprint, shards, seqLen) under
-  // the session warehouse — the fingerprint and both packing parameters
-  // are IN the directory name, so the parquet committer's own `_SUCCESS`
-  // is a sufficient commit marker, a regenerated corpus can never be
-  // served by a stale no-op, and a second seqLen gets its own layout
-  // (the r18 advice bug by construction cannot recur). Pay-once spans
-  // processes: a later JVM whose documents still match ADOPTS the
+  // item 4): a [[graft.WarehouseArtifact]] family, like the video corpus.
+  // A packed corpus commits ONCE per (corpus fingerprint, shards, seqLen)
+  // under the session warehouse — the fingerprint and both packing
+  // parameters are IN the directory name, so the parquet committer's own
+  // `_SUCCESS` is a sufficient commit marker, a regenerated corpus can
+  // never be served by a stale no-op, and a second seqLen gets its own
+  // layout (the r18 advice bug by construction cannot recur). Pay-once
+  // spans processes: a later JVM whose documents still match ADOPTS the
   // committed corpus; crash debris and superseded generations are
   // reclaimed by the next staging's sweep. ----
+
+  /** The packed corpus's warehouse dirs,
+    * `g_packed_<md5(dir)>_<fp>_s<shards>_L<seqLen>_…`.
+    */
+  private[graft] val packedDirs = new graft.WarehouseArtifact("packed")
 
   /** Committed packed-corpus path per (dir, shards, seqLen); superseding
     * a generation releases its dir from the live set for the next sweep.
     */
   private[graft] val stagedPacked = new graft.SourceMemo[(String, Int, Long), String](
-    path => packedLivePaths.remove(new org.apache.hadoop.fs.Path(path).getName): Unit)
-  private val packedInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val packedLivePaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    path => packedDirs.release(path))
 
   /** Actual packing WRITES this process performed — spec observability
     * for the pay-once / cold-open contract (adoption must not re-pack).
     */
   private[graft] val packedStagings = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** ALL on-disk packed-corpus dirs for `dir` (committed or debris, any
-    * fingerprint/params) — the sweep/leak observability probe.
-    */
-  private[graft] def packedDirsOnDiskFor(spark: SparkSession, dir: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) Nil
-    else fs.listStatus(whPath).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(s"g_packed_${annDirKey(dir)}_")).sorted
-  }
-
-  private def committedPackedDirs(spark: SparkSession, dir: String, fp: String,
-      shards: Int, seqLen: Long): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) return Nil
-    val prefix = s"g_packed_${annDirKey(dir)}_${fp}_s${shards}_L${seqLen}_"
-    fs.listStatus(whPath).map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).sorted.toSeq
-      .filter(name => fs.exists(new org.apache.hadoop.fs.Path(s"$wh/$name/_SUCCESS")))
-      .map(name => s"$wh/$name")
-  }
-
-  /** Reclaim THIS process's own dead packed stagings for `dir`: own-tag
-    * dirs that are neither live nor mid-write and are either uncommitted
-    * (crash debris) or committed against a STALE corpus fingerprint
-    * (superseded by a regeneration — adoption can never pick them again;
-    * same-fp dirs at OTHER (shards, seqLen) are live siblings and are
-    * kept). The videoContainers sweep discipline verbatim; the quiesce
-    * note there applies.
-    */
-  private def sweepPackedDebris(spark: SparkSession, wh: String, dir: String,
-      fp: String): Unit =
-    scala.util.Try {
-      val whPath = new org.apache.hadoop.fs.Path(wh)
-      val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(whPath)) fs.listStatus(whPath).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(s"g_packed_${annDirKey(dir)}_") &&
-            n.contains(s"_${processTag}_") &&
-            !packedLivePaths.contains(n) && !packedInFlight.contains(n)) {
-          val committed = fs.exists(new org.apache.hadoop.fs.Path(s"$wh/$n/_SUCCESS"))
-          val stale = !n.startsWith(s"g_packed_${annDirKey(dir)}_${fp}_")
-          if (!committed || stale) fs.delete(st.getPath, true)
-        }
-      }
-    }
 
   /** The packed corpus, staged-or-adopted under the warehouse: returns
     * the committed dir for (dir's current fingerprint, shards, seqLen),
@@ -3516,29 +3386,12 @@ object Pipeline {
 
   private def stageOrAdoptPacked(spark: SparkSession, dir: String, fp: String,
       shards: Int, seqLen: Long): String =
-    committedPackedDirs(spark, dir, fp, shards, seqLen).headOption match {
-      case Some(p) =>
-        packedLivePaths.add(new org.apache.hadoop.fs.Path(p).getName)
-        // adopt is also a staging point (an always-adopting process must
-        // still reclaim its own superseded dirs — the video rule)
-        sweepPackedDebris(spark, spark.conf.get("spark.sql.warehouse.dir"), dir, fp)
-        p
-      case None =>
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val name = s"g_packed_${annDirKey(dir)}_${fp}_s${shards}_L${seqLen}_" +
-          s"${processTag}_" + java.util.UUID.randomUUID.toString.take(8)
-        val out = s"$wh/$name"
-        packedInFlight.add(name)
-        try {
-          sweepPackedDebris(spark, wh, dir, fp)
-          packedStagings.incrementAndGet()
-          packedSequences(spark, dir, shards, seqLen)
-            .repartition(shards, col("shard"))
-            .sortWithinPartitions("shard", "seq")
-            .write.mode("overwrite").partitionBy("shard").parquet(out) // _SUCCESS commits
-          packedLivePaths.add(name)
-          out
-        } finally packedInFlight.remove(name)
+    packedDirs.stageOrAdopt(spark, dir, fp, s"s$shards", s"L$seqLen") { out =>
+      packedStagings.incrementAndGet()
+      packedSequences(spark, dir, shards, seqLen)
+        .repartition(shards, col("shard"))
+        .sortWithinPartitions("shard", "seq")
+        .write.mode("overwrite").partitionBy("shard").parquet(out) // _SUCCESS commits
     }
 
   /** q153: the packed corpus WRITTEN and READ BACK, driver-gated
@@ -3714,37 +3567,33 @@ object Pipeline {
       .reduce(_ unionByName _)
   }
 
-  // warehouse stage-or-adopt for the epoch root (q155): the root is NOT
-  // fingerprint-named (its whole point is to survive corpus growth), so
-  // adoption tests COMPATIBILITY instead — a root is adoptable iff it has
-  // committed epochs and none of its packed ids has vanished from the
-  // current table. An in-place regeneration fails the test, the root is
-  // abandoned (own-tag roots are swept at the next staging point) and a
-  // fresh root stages.
-  private val stagedPackedEpochRoots = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Long), graft.LazyCell[String]]()
+  /** The epoch roots' warehouse dirs, `g_packedep_<md5(dir)>_s<shards>_L<seqLen>_…`
+    * — q155's [[graft.WarehouseArtifact]] family. A root is NOT
+    * fingerprint-named (its whole point is to survive corpus growth), so
+    * adoption tests COMPATIBILITY instead of `_SUCCESS`: a root is
+    * adoptable iff it has committed epochs and none of its packed ids has
+    * vanished from the current table. An in-place regeneration fails the
+    * test, the root is abandoned (own-tag roots are swept at the next
+    * staging point) and a fresh root stages.
+    */
+  private[graft] val packedEpochDirs = new graft.WarehouseArtifact("packedep")
+
+  /** The adopted-or-created root per (dir, shards, seqLen). Its generation
+    * is constant: a root outlives corpus growth, and [[q155]] replaces it
+    * by hand when a regeneration makes it unappendable.
+    */
+  private val stagedPackedEpochRoots = new graft.SourceMemo[(String, Int, Long), String](
+    root => packedEpochDirs.release(root))
+
   /** documents-fingerprint at this session's last successful epoch sync —
     * [[q155]]'s fast path (an unchanged fingerprint proves the append
     * would no-op, so its id anti-joins are skipped).
     */
   private val packedEpochSynced = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Int, Long), String]()
-  private val packedEpochLive =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val packedEpochInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Epoch WRITES this process performed (one per committed epoch). */
   private[graft] val packedEpochStagings = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private[graft] def packedEpochRootsOnDiskFor(spark: SparkSession, dir: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) Nil
-    else fs.listStatus(whPath).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(s"g_packedep_${annDirKey(dir)}_")).sorted
-  }
 
   private def epochRootCompatible(spark: SparkSession, dir: String, root: String): Boolean =
     committedEpochsUnder(spark, root).nonEmpty && packedEpochIds(spark, root).forall {
@@ -3754,53 +3603,27 @@ object Pipeline {
           .limit(1).count() == 0
     }
 
-  /** Reclaim THIS process's own dead epoch roots for `dir`: own-tag roots
-    * that are neither live nor mid-write and are either epoch-less
-    * (crash debris from a staging that died before epoch 0 committed) or
-    * INCOMPATIBLE with the current table (an in-place regeneration
-    * orphaned them — adoption can never pick them again).
+  /** Adopt the first compatible root for (dir, shards, seqLen), or create
+    * an empty one. Either way this process's roots for `dir` that are
+    * epoch-less (crash debris from a staging that died before epoch 0
+    * committed) or INCOMPATIBLE with the current table (an in-place
+    * regeneration orphaned them — adoption can never pick them again) are
+    * swept.
     */
-  private def sweepPackedEpochDebris(spark: SparkSession, wh: String,
-      dir: String): Unit =
-    scala.util.Try {
-      val whPath = new org.apache.hadoop.fs.Path(wh)
-      val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(whPath)) fs.listStatus(whPath).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(s"g_packedep_${annDirKey(dir)}_") &&
-            n.contains(s"_${processTag}_") &&
-            !packedEpochLive.contains(n) && !packedEpochInFlight.contains(n) &&
-            !epochRootCompatible(spark, dir, s"$wh/$n"))
-          fs.delete(st.getPath, true)
-      }
-    }
-
   private def adoptOrCreateEpochRoot(spark: SparkSession, dir: String,
       shards: Int, seqLen: Long): String = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = s"g_packedep_${annDirKey(dir)}_s${shards}_L${seqLen}_"
-    val adopted =
-      if (!fs.exists(whPath)) None
-      else fs.listStatus(whPath).map(_.getPath.getName).toSeq
-        .filter(_.startsWith(prefix)).sorted
-        .find(n => epochRootCompatible(spark, dir, s"$wh/$n"))
-    adopted match {
-      case Some(n) =>
-        packedEpochLive.add(n)
-        sweepPackedEpochDebris(spark, wh, dir)
-        s"$wh/$n"
-      case None =>
-        val name = prefix + s"${processTag}_" +
-          java.util.UUID.randomUUID.toString.take(8)
-        packedEpochInFlight.add(name)
-        try {
-          sweepPackedEpochDebris(spark, wh, dir)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(s"$wh/$name"))
-          packedEpochLive.add(name)
-          s"$wh/$name"
-        } finally packedEpochInFlight.remove(name)
+    val params = Seq(s"s$shards", s"L$seqLen")
+    val dead = graft.WarehouseArtifact.Dead(
+      own = root => !epochRootCompatible(spark, dir, root))
+    packedEpochDirs.names(spark, dir, params: _*).map(packedEpochDirs.path(spark, _))
+      .find(epochRootCompatible(spark, dir, _)) match {
+      case Some(root) => packedEpochDirs.adopt(spark, dir, root, dead)
+      case None => packedEpochDirs.stage(spark, dir, params: _*)(dead) { root =>
+        new org.apache.hadoop.fs.Path(root)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .mkdirs(new org.apache.hadoop.fs.Path(root))
+        root
+      }
     }
   }
 
@@ -3823,10 +3646,8 @@ object Pipeline {
       seqLen: Long = 512L): DataFrame = {
     val key = (spark, dir, shards, seqLen)
     val fp = videoSourceFp(spark, dir) // = fingerprint of documents.parquet
-    def rootOf(): String = graft.LazyCell.force(stagedPackedEpochRoots, key,
-      stagedPackedEpochRoots.computeIfAbsent(key,
-        _ => new graft.LazyCell(adoptOrCreateEpochRoot(spark, dir, shards, seqLen))))
-    val root0 = rootOf()
+    val root0 = stagedPackedEpochRoots.get(spark, (dir, shards, seqLen), "")(
+      _ => adoptOrCreateEpochRoot(spark, dir, shards, seqLen))
     // fast path: the table's fingerprint is unchanged since this session
     // last synced this root, so the append could only no-op — skip its
     // id anti-joins (a metadata listing instead of two jobs per call).
@@ -3840,9 +3661,9 @@ object Pipeline {
       } catch { case _: IllegalStateException =>
         // in-place regeneration: the memoized lineage is unappendable —
         // release it and stage a fresh root (the old one is swept there)
-        stagedPackedEpochRoots.remove(key)
-        packedEpochLive.remove(new org.apache.hadoop.fs.Path(root0).getName)
-        val r2 = rootOf()
+        packedEpochDirs.release(root0)
+        val r2 = adoptOrCreateEpochRoot(spark, dir, shards, seqLen)
+        stagedPackedEpochRoots.put(spark, (dir, shards, seqLen), "", r2)
         appendPackedEpochs(spark, dir, r2, shards, seqLen)
         packedEpochSynced.put(key, fp)
         r2
@@ -4146,8 +3967,9 @@ object Pipeline {
     * another thread can fail mid-scan on deleted files. In-place
     * regeneration concurrent with in-flight queries is out of contract for
     * every staged artifact here (the same race deletes live ANN codes via
-    * sweepAnnDebris and rewrites live bucketed tables); the failure mode is
-    * a loud FileNotFound on the superseded generation, never a wrong answer.
+    * the [[graft.WarehouseArtifact]] sweep and rewrites live bucketed
+    * tables); the failure mode is a loud FileNotFound on the superseded
+    * generation, never a wrong answer.
     */
   private[graft] val stagedShardRoots = new graft.SourceMemo[(String, Int), String](root =>
     scala.util.Try {
@@ -4157,27 +3979,6 @@ object Pipeline {
       }
       rmr(new java.io.File(root))
     }: Unit)
-  /** Committed on-disk video corpora for `dir`'s CURRENT fingerprint (any
-    * process) — cold-open observability for the warehouse-commit layout.
-    * Counts ALL committed same-fp dirs (r18 advice: the Option-based
-    * probe could only ever report 0 or 1, hiding a second process's
-    * committed duplicate from the leak specs).
-    */
-  private[graft] def committedVideoDirsFor(spark: SparkSession, dir: String): Int = {
-    val fp = videoSourceFp(spark, dir)
-    committedVideoDirs(spark, dir, fp).size
-  }
-  /** ALL on-disk video-corpus dirs for `dir` (committed or debris, any
-    * fingerprint) — the sweep/leak observability probe.
-    */
-  private[graft] def videoDirsOnDiskFor(spark: SparkSession, dir: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) Nil
-    else fs.listStatus(whPath).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(s"g_videos_${annDirKey(dir)}_")).sorted
-  }
 
   /** q140: the materialized training order, driver-gated end-to-end (r14
     * verdict item 8) — [[writeShuffledShards]] then [[readShuffledShards]]
@@ -4235,35 +4036,18 @@ object Pipeline {
     def cells: Int = cents.length
   }
 
+  /** The staged index's warehouse dirs, `g_ann_codes_<md5(dir)>_…` — no
+    * identity part: the data fingerprint lives in the committed meta.
+    */
+  private[graft] val annDirs = new graft.WarehouseArtifact("ann_codes")
+
   /** The staged index per dir. Superseding a generation releases its
-    * codes dir from the live set: the next staging's sweepAnnDebris skips
-    * LIVE paths, so this process's own stale codes would otherwise linger
-    * forever (r16 advice).
+    * codes dir from the live set: the staging sweep skips LIVE dirs, so
+    * this process's own stale codes would otherwise linger forever (r16
+    * advice).
     */
-  private[graft] val stagedAnn = new graft.SourceMemo[String, AnnIndex](idx =>
-    annLivePaths.remove(new org.apache.hadoop.fs.Path(idx.codesPath).getName): Unit)
-
-  /** Process-unique component of staged-codes paths: scopes the stale-dir
-    * sweep in [[stageAnnIndex]] to this process's own debris.
-    */
-  private val processTag: String =
-    java.util.UUID.randomUUID.toString.take(8)
-
-  /** Staging paths (by directory name) currently being WRITTEN in this
-    * process: registered before any bytes land, so the stale-dir sweep
-    * can never reclaim a sibling staging that is mid-write but not yet
-    * memoized — two sessions staging the same dir concurrently could
-    * race exactly that way (r15 advice).
-    */
-  private val annInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Directory names of every index this process staged or adopted — the
-    * sweep's live set. Kept separately from the memo map so building it
-    * never forces an unmaterialized [[LazyCell]] into a training run.
-    */
-  private val annLivePaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private[graft] val stagedAnn = new graft.SourceMemo[String, AnnIndex](
+    idx => annDirs.release(idx.codesPath))
 
   /** Number of actual TRAINING runs [[stageAnnIndex]] performed in this
     * process — spec observability for the pay-once / cold-open contract
@@ -4280,13 +4064,6 @@ object Pipeline {
     */
   private def annSourceFp(spark: SparkSession, dir: String): String =
     graft.Fingerprint.of(spark, s"$dir/embeddings.parquet")
-
-  /** Path identity (r14 advice): full md5 of the dir — a 32-bit hashCode
-    * could collide two distinct dirs onto one codes-path prefix.
-    */
-  private def annDirKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** The quantizer + codebook + provenance, persisted INSIDE the codes
     * dir under underscore-prefixed children — hidden from the codes scan
@@ -4417,25 +4194,18 @@ object Pipeline {
     * was written, so an adopter always has it.
     */
   private def committedAnnCandidates(spark: SparkSession, dir: String)
-      : Seq[(Boolean, String, String, AnnIndex)] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) return Nil
-    val prefix = s"g_ann_codes_${annDirKey(dir)}_"
-    fs.listStatus(whPath).map(_.getPath.getName)
-      .filter(_.startsWith(prefix)).sorted.toSeq
+      : Seq[(Boolean, String, String, AnnIndex)] =
+    annDirs.names(spark, dir)
       .flatMap { name =>
-        val codesPath = s"$wh/$name"
+        val codesPath = annDirs.path(spark, name)
         readAnnMeta(spark, codesPath).collect {
           case m if m.dir == dir && m.retiredTo.isEmpty =>
-            val hasDeltas = fs.exists(
+            val hasDeltas = annFs(spark, codesPath).exists(
               new org.apache.hadoop.fs.Path(s"$codesPath/_delta"))
             (hasDeltas, name, m.fp, m.idx)
         }
       }
       .sortBy { case (hasDeltas, name, _, _) => (hasDeltas, name) }
-  }
 
   private def findCommittedAnn(spark: SparkSession, dir: String, fp: String)
       : Option[AnnIndex] =
@@ -4464,25 +4234,10 @@ object Pipeline {
       fp: String): AnnIndex =
     findCommittedAnn(spark, dir, fp) match {
       case Some(idx) =>
-        annLivePaths.add(new org.apache.hadoop.fs.Path(idx.codesPath).getName)
-        // adopt is also a staging point — reclaim own superseded debris
-        // here too, or an always-adopting process never sweeps (r18)
-        sweepAnnDebris(spark, spark.conf.get("spark.sql.warehouse.dir"),
-          annDirKey(dir), fp)
+        annDirs.adopt(spark, dir, idx.codesPath, annDead(spark, fp))
         idx
       case None =>
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val dirKey = annDirKey(dir)
-        // per-staging-unique suffix (UUID — unique across JVMs): two
-        // concurrent stagers write DISJOINT paths, each self-consistent
-        // with its own memoized quantizer; nothing ever re-derives the
-        // path, so uniqueness costs no determinism (r14 advice)
-        val name = s"g_ann_codes_${dirKey}_${processTag}_" +
-          java.util.UUID.randomUUID.toString.take(8)
-        val path = s"$wh/$name"
-        annInFlight.add(name)
-        try {
-          sweepAnnDebris(spark, wh, dirKey, fp)
+        annDirs.stage(spark, dir)(annDead(spark, fp)) { path =>
           annTrainings.incrementAndGet()
           val emb = Tables.embeddings(spark, dir)
             .withColumn("nrm", TextVecExprs.floatVecNorm(col("embedding")))
@@ -4495,61 +4250,39 @@ object Pipeline {
           ivfadcIndex(emb, cents, cb)
             .write.partitionBy("bkt").mode("overwrite").parquet(path)
           writeAnnMeta(spark, path, dir, fp, cents, cb) // the commit point
-          annLivePaths.add(name)
           AnnIndex(path, cents, cb)
-        } finally annInFlight.remove(name)
+        }
     }
 
-  /** Reclaim THIS process's own dead stagings for `dirKey`: dirs carrying
-    * this process's tag that are neither live (staged/adopted, in
-    * [[annLivePaths]]) nor mid-write ([[annInFlight]] — registered
-    * before any bytes land, closing the r15 race where a sibling
-    * staging's fresh path was swept mid-write), and are either
-    * UNCOMMITTED (throw-debris from a staging that died before its meta
-    * write) or committed against a STALE fingerprint of this dir (a
-    * regeneration superseded them; adoption can never pick them again).
-    * Other processes' dirs are never touched — deleting a path we cannot
-    * prove dead trades a bounded disk leak for breaking someone's live
-    * index — with ONE exception (r19, the retirement protocol): a dir
-    * whose committed meta carries a TOMBSTONE ([[AnnMeta.retiredTo]]) was
-    * declared dead by the compaction that merged it away, adoption skips
-    * it from the moment the tombstone commits, and once the tombstone's
-    * own grace period has elapsed (measured from the tombstone commit's
-    * `_SUCCESS` mtime — the grace covers another process's in-flight
-    * probes planned against the old codes) ANY process's sweep may
-    * reclaim it, whoever wrote it. Disk is thus recovered within a
-    * generation instead of at the next regeneration.
-    *
-    * QUIESCE NOTE (r17 verdict item 5): a same-process query planned
-    * against a STALE generation's codes and still running when this sweep
-    * fires would lose its scan mid-flight. Queries spanning an in-place
-    * data regeneration are OUT OF CONTRACT for every staging in this file
-    * — the regeneration already invalidated their inputs — and the sweep
-    * runs only inside an explicit (re-)staging, never on the probe/read
-    * path, so a quiesced re-stage (the BatchStore.compactStore contract)
-    * is safe by construction.
+  /** The index family's dead rule for the [[graft.WarehouseArtifact]]
+    * sweep. This process's dirs are dead when UNCOMMITTED (throw-debris
+    * from a staging that died before its meta write) or committed against
+    * a STALE fingerprint of this dir (a regeneration superseded them;
+    * adoption can never pick them again). Another process's dir is dead
+    * only by the retirement protocol (r19): a dir whose committed meta
+    * carries a TOMBSTONE ([[AnnMeta.retiredTo]]) was declared dead by the
+    * compaction that merged it away, adoption skips it from the moment
+    * the tombstone commits, and once the tombstone's own grace period has
+    * elapsed (measured from the tombstone commit's `_SUCCESS` mtime — the
+    * grace covers another process's in-flight probes planned against the
+    * old codes) ANY process's sweep may reclaim it, whoever wrote it. Disk
+    * is thus recovered within a generation instead of at the next
+    * regeneration.
     */
-  private def sweepAnnDebris(spark: SparkSession, wh: String, dirKey: String,
-      fp: String): Unit =
-    scala.util.Try {
-      val whPath = new org.apache.hadoop.fs.Path(wh)
-      val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(whPath)) fs.listStatus(whPath).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(s"g_ann_codes_${dirKey}_") &&
-            !annLivePaths.contains(n) && !annInFlight.contains(n)) {
-          val meta = readAnnMeta(spark, s"$wh/$n")
-          val ownDead = n.startsWith(s"g_ann_codes_${dirKey}_${processTag}_") &&
-            (meta.isEmpty || meta.exists(_.fp != fp))
-          val tombExpired = meta.exists(m => m.retiredTo.isDefined &&
-            annTombstoneExpired(fs, s"$wh/$n", m.graceMs))
-          if (ownDead || tombExpired) fs.delete(st.getPath, true)
-        }
-      }
-    }
+  private def annDead(spark: SparkSession, fp: String): graft.WarehouseArtifact.Dead = {
+    def expired(path: String, meta: Option[AnnMeta]): Boolean =
+      meta.exists(m => m.retiredTo.isDefined &&
+        annTombstoneExpired(annFs(spark, path), path, m.graceMs))
+    graft.WarehouseArtifact.Dead(
+      own = path => {
+        val meta = readAnnMeta(spark, path)
+        meta.forall(_.fp != fp) || expired(path, meta)
+      },
+      foreign = path => expired(path, readAnnMeta(spark, path)))
+  }
 
   /** True when `codesPath`'s tombstone commit is older than its grace —
-    * the retirement protocol's reclaim gate ([[sweepAnnDebris]]).
+    * the retirement protocol's reclaim gate ([[annDead]]).
     */
   private def annTombstoneExpired(fs: org.apache.hadoop.fs.FileSystem,
       codesPath: String, graceMs: Long): Boolean =
@@ -4585,16 +4318,15 @@ object Pipeline {
     */
   private def findCommittedAnnAnyFp(spark: SparkSession, dir: String)
       : Option[(String, AnnIndex)] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cands = committedAnnCandidates(spark, dir)
     if (cands.isEmpty) return None
-    def metaMtime(idx: AnnIndex): Long =
+    def metaMtime(idx: AnnIndex): Long = {
+      val fs = annFs(spark, idx.codesPath)
       annMetaVersions(fs, idx.codesPath).headOption.flatMap { case (_, p) =>
         scala.util.Try(fs.getFileStatus(new org.apache.hadoop.fs.Path(
           p, "_SUCCESS")).getModificationTime).toOption
       }.getOrElse(0L)
+    }
     val best = cands.zipWithIndex
       .minBy { case ((_, _, _, idx), i) => (-metaMtime(idx), i) }._1
     Some((best._3, best._4))
@@ -4609,18 +4341,6 @@ object Pipeline {
         .committedBatches(spark, s"${idx.codesPath}/_delta", Long.MaxValue).map(_._1)
     }
 
-  /** ALL on-disk index dirs for `dir` (committed, tombstoned or debris,
-    * any process) — the retirement/sweep observability probe.
-    */
-  private[graft] def annDirsOnDiskFor(spark: SparkSession, dir: String): Seq[String] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val whPath = new org.apache.hadoop.fs.Path(wh)
-    val fs = whPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(whPath)) Nil
-    else fs.listStatus(whPath).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(s"g_ann_codes_${annDirKey(dir)}_")).sorted
-  }
-
   /** Committed meta version numbers under a codes dir, newest first —
     * spec observability for the versioned-commit discipline.
     */
@@ -4630,9 +4350,8 @@ object Pipeline {
   /** Tombstoned (retired) index dirs for `dir`: (name, retiredTo). */
   private[graft] def annRetiredDirsFor(spark: SparkSession, dir: String)
       : Seq[(String, String)] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    annDirsOnDiskFor(spark, dir).flatMap { n =>
-      readAnnMeta(spark, s"$wh/$n").flatMap(_.retiredTo).map(n -> _)
+    annDirs.names(spark, dir).flatMap { n =>
+      readAnnMeta(spark, annDirs.path(spark, n)).flatMap(_.retiredTo).map(n -> _)
     }
   }
 
@@ -4674,7 +4393,7 @@ object Pipeline {
   private def adoptOrAppendAnn(spark: SparkSession, dir: String, fp: String): AnnIndex = {
     findCommittedAnn(spark, dir, fp) match {
       case Some(idx) => // already committed at this fingerprint: adopt
-        annLivePaths.add(new org.apache.hadoop.fs.Path(idx.codesPath).getName)
+        annDirs.markLive(idx.codesPath)
         return idx
       case None =>
     }
@@ -4683,7 +4402,6 @@ object Pipeline {
         s"no committed ANN index exists for $dir — appendAnnIndex needs a " +
         "base; call Pipeline.stageAnnIndex(spark, dir) first (training is " +
         "always explicit)"))
-    val name = new org.apache.hadoop.fs.Path(base.codesPath).getName
     val emb = Tables.embeddings(spark, dir)
     // ONE materialization of the id-grain discovery inputs: the gone-check
     // anti-join, the fresh anti-join and the encode pass all reuse them
@@ -4713,7 +4431,7 @@ object Pipeline {
     } finally { existingIds.unpersist(): Unit }
     // flip adoption to the current fingerprint — THE append commit point
     writeAnnMeta(spark, base.codesPath, dir, fp, base.cents, base.cb)
-    annLivePaths.add(name)
+    annDirs.markLive(base.codesPath)
     base
   }
 
@@ -4754,29 +4472,23 @@ object Pipeline {
     val deltas = graft.streaming.BatchStore
       .committedBatches(spark, s"${idx.codesPath}/_delta", Long.MaxValue)
     if (deltas.isEmpty) return idx
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val oldName = new org.apache.hadoop.fs.Path(idx.codesPath).getName
-    val name = s"g_ann_codes_${annDirKey(dir)}_${processTag}_" +
-      java.util.UUID.randomUUID.toString.take(8)
-    val path = s"$wh/$name"
-    annInFlight.add(name)
-    try {
+    val merged = annDirs.stage(spark, dir)(annDead(spark, fp)) { path =>
       annCodesRelation(spark, idx.codesPath)
         .write.partitionBy("bkt").mode("overwrite").parquet(path)
       writeAnnMeta(spark, path, dir, fp, idx.cents, idx.cb) // the commit point
-      annLivePaths.add(name)
-    } finally annInFlight.remove(name)
+      AnnIndex(path, idx.cents, idx.cb)
+    }
     // retire the merged-away dir: release it from this process's live
     // set, tombstone it (ordered AFTER the successor's commit, so a
     // reader always has one adoptable index), and sweep — which deletes
     // it now only if the grace is already over (grace 0 = reclaim here)
-    annLivePaths.remove(oldName)
+    annDirs.release(idx.codesPath)
     scala.util.Try {
       writeAnnMeta(spark, idx.codesPath, dir, fp, idx.cents, idx.cb,
-        retiredTo = Some(name), graceMs = retireGraceMs)
+        retiredTo = Some(new org.apache.hadoop.fs.Path(merged.codesPath).getName),
+        graceMs = retireGraceMs)
     }: Unit
-    sweepAnnDebris(spark, wh, annDirKey(dir), fp)
-    val merged = AnnIndex(path, idx.cents, idx.cb)
+    annDirs.sweep(spark, dir, annDead(spark, fp))
     stagedAnn.put(spark, dir, fp, merged)
     merged
   }
@@ -4796,7 +4508,7 @@ object Pipeline {
     val idx = stagedAnn.get(spark, dir, annSourceFp(spark, dir)) { fp =>
       findCommittedAnn(spark, dir, fp) match {
         case Some(found) =>
-          annLivePaths.add(new org.apache.hadoop.fs.Path(found.codesPath).getName)
+          annDirs.markLive(found.codesPath)
           found
         case None => throw new IllegalStateException(
           s"ANN index not staged for $dir in this session and no committed " +

@@ -65,10 +65,10 @@ class BucketedJoinSpec extends SparkSpec {
     val queriesDf = Pipeline.annQueries(emb)
     val cells = Pipeline.ivfadcProbedCells(queriesDf, cents, nprobe = 4)
     assert(cells.nonEmpty && cells.length <= 40) // ≤ |queries|·nprobe
-    // probe at q88's DEFAULT operating point ((8, 400) since r15) so the
-    // parity assertion compares identical params on the same trained index
+    // probe at q88's DEFAULT operating point so the parity assertion
+    // compares identical params on the same trained index
     val staged = Pipeline.ivfadcStagedProbe(spark, dir, emb, queriesDf, cents, cb,
-      nprobe = 8, rerank = 400)
+      nprobe = Pipeline.AnnNprobe, rerank = Pipeline.AnnRerank)
     val stagedRows = staged.collect().toSeq
     val inlineRows = Pipeline.q88(spark, sf0001).collect().toSeq
     assert(stagedRows == inlineRows,

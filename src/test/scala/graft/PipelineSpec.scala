@@ -161,12 +161,12 @@ class PipelineSpec extends SparkSpec {
     val exact = TextVec.q16(spark, sf0001).collect().toSeq
     assert(Pipeline.q136(spark, sf0001).collect().toSeq === exact)
     assert(Pipeline.isAnnIndexStaged(spark, sf0001))
-    // and at the default deployment operating point (8, 400 — the r15
-    // sweep knee q88 ships) the staged probe matches the inline q88 rows
-    // (same params, same trained index)
+    // and at the default deployment operating point (the r15 sweep knee
+    // q88 ships) the staged probe matches the inline q88 rows (same
+    // params, same trained index)
     val inline = Pipeline.q88(spark, sf0001).collect().toSeq
-    val staged = Pipeline.annSearchStaged(spark, sf0001, nprobe = 8, rerank = 400)
-      .collect().toSeq
+    val staged = Pipeline.annSearchStaged(spark, sf0001,
+      nprobe = Pipeline.AnnNprobe, rerank = Pipeline.AnnRerank).collect().toSeq
     assert(staged === inline)
   }
 

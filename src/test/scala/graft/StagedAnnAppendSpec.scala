@@ -146,10 +146,10 @@ class StagedAnnAppendSpec extends SparkSpec {
     Pipeline.stageAnnIndex(spark, a)
     writeEmb(a, _ => true)
     Pipeline.appendAnnIndex(spark, a)
-    assert(Pipeline.annDirsOnDiskFor(spark, a).size === 1)
+    assert(Pipeline.annDirs.names(spark, a).size === 1)
     val merged = Pipeline.compactAnnIndex(spark, a, retireGraceMs = 0L)
     val mergedName = new org.apache.hadoop.fs.Path(merged.codesPath).getName
-    assert(Pipeline.annDirsOnDiskFor(spark, a) === Seq(mergedName),
+    assert(Pipeline.annDirs.names(spark, a) === Seq(mergedName),
       "grace 0: the tombstoned dir is reclaimed by compaction's own sweep")
     assert(Pipeline.annRetiredDirsFor(spark, a) === Seq.empty)
 
@@ -159,10 +159,10 @@ class StagedAnnAppendSpec extends SparkSpec {
     Pipeline.stageAnnIndex(spark, b)
     writeEmb(b, _ => true)
     Pipeline.appendAnnIndex(spark, b)
-    val oldB = Pipeline.annDirsOnDiskFor(spark, b)
+    val oldB = Pipeline.annDirs.names(spark, b)
     val mergedB = Pipeline.compactAnnIndex(spark, b, retireGraceMs = Long.MaxValue)
     val mergedBName = new org.apache.hadoop.fs.Path(mergedB.codesPath).getName
-    assert(Pipeline.annDirsOnDiskFor(spark, b).toSet === (oldB :+ mergedBName).toSet,
+    assert(Pipeline.annDirs.names(spark, b).toSet === (oldB :+ mergedBName).toSet,
       "unexpired grace: the merged-away dir must survive (another process may hold it)")
     assert(Pipeline.annRetiredDirsFor(spark, b) === Seq((oldB.head, mergedBName)),
       "the tombstone names the merged successor")
@@ -176,7 +176,7 @@ class StagedAnnAppendSpec extends SparkSpec {
     assert(Pipeline.annTrainings.get === before)
     // a staging-time sweep before the grace elapses must NOT reclaim it
     Pipeline.stageAnnIndex(s2, b)
-    assert(Pipeline.annDirsOnDiskFor(spark, b).size === 2,
+    assert(Pipeline.annDirs.names(spark, b).size === 2,
       "sweep honors the tombstone's own grace period")
   }
 

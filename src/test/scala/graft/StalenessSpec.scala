@@ -183,7 +183,7 @@ class StalenessSpec extends SparkSpec {
       "the committed-version no-op must not serve the previous generation")
     assert(Pipeline.stagedPacked.entriesFor(spark)(_._1 == dir) === 1,
       "the superseded generation's packed root must be evicted")
-    assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 1,
+    assert(Pipeline.packedDirs.names(spark, dir).size === 1,
       "the superseded generation's warehouse dir must be swept by the re-staging")
   }
 
@@ -196,7 +196,7 @@ class StalenessSpec extends SparkSpec {
     val n0 = Pipeline.packedStagings.get
     val viaStage = Pipeline.q153(spark, dir).collect()
     assert(Pipeline.packedStagings.get === n0 + 1)
-    assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 1,
+    assert(Pipeline.packedDirs.names(spark, dir).size === 1,
       "staging must leave one committed corpus under the warehouse")
     Pipeline.q153(spark, dir).collect()
     assert(Pipeline.packedStagings.get === n0 + 1, "same session: memoized, no re-pack")
@@ -211,7 +211,7 @@ class StalenessSpec extends SparkSpec {
     // equal its direct (q152) assembly
     val at4 = Pipeline.q153(spark, dir, seqLen = 4L).collect()
     assert(Pipeline.packedStagings.get === n0 + 2, "a new seqLen is a new layout")
-    assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 2)
+    assert(Pipeline.packedDirs.names(spark, dir).size === 2)
     assert(at4.map(_.toString).toSeq !== viaStage.map(_.toString).toSeq,
       "seqLen 4 must actually pack differently on this corpus")
     val want4 = Pipeline.q152(spark, dir, seqLen = 4L)
@@ -232,7 +232,7 @@ class StalenessSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     writeDocs(Seq((1L, "s", "a b"), (2L, "s", "c")))
     Pipeline.q153(spark, dir).collect()
-    val committed = Pipeline.packedDirsOnDiskFor(spark, dir)
+    val committed = Pipeline.packedDirs.names(spark, dir)
     assert(committed.size === 1)
     // fabricate an UNCOMMITTED own-tag sibling — the shape of a staging
     // that died after creating its directory, before the _SUCCESS commit
@@ -241,12 +241,12 @@ class StalenessSpec extends SparkSpec {
     val dPath = java.nio.file.Paths.get(wh, debris)
     java.nio.file.Files.createDirectories(dPath)
     java.nio.file.Files.writeString(dPath.resolve("part-junk.parquet"), "x")
-    assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 2)
+    assert(Pipeline.packedDirs.names(spark, dir).size === 2)
     // regenerate: the re-staging's sweep reclaims BOTH the uncommitted
     // debris and the superseded committed generation
     writeDocs(Seq((7L, "s", "x y z")))
     Pipeline.q153(spark, dir).collect()
-    assert(Pipeline.packedDirsOnDiskFor(spark, dir).size === 1,
+    assert(Pipeline.packedDirs.names(spark, dir).size === 1,
       "crash debris and the stale generation must both be swept")
   }
 
@@ -258,7 +258,7 @@ class StalenessSpec extends SparkSpec {
     val n0 = Pipeline.videoStagings.get
     val viaStage = Pipeline.q148(spark, dir).collect()
     assert(Pipeline.videoStagings.get === n0 + 1)
-    assert(Pipeline.committedVideoDirsFor(spark, dir) === 1,
+    assert(Pipeline.videoDirs.committed(spark, dir).size === 1,
       "staging must leave one committed corpus under the warehouse")
     Pipeline.q148(spark, dir).collect()
     assert(Pipeline.videoStagings.get === n0 + 1, "same session: memoized, no re-synthesis")
@@ -285,7 +285,7 @@ class StalenessSpec extends SparkSpec {
     Seq((3L, "s", "ok doc")).toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     assert(Pipeline.q148(spark, dir).collect().map(_.getLong(0)).toSeq === Seq(3L))
-    assert(Pipeline.videoDirsOnDiskFor(spark, dir).size === 1,
+    assert(Pipeline.videoDirs.names(spark, dir).size === 1,
       "crash debris (uncommitted dir) must be swept by the next staging")
   }
 
