@@ -1,5 +1,7 @@
 package graft.kv
 
+import java.util.stream.IntStream
+
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -10,19 +12,23 @@ import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter.{ColumnPredicates, ColumnRecordFilter}
 import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.api.InitContext
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.internal.column.columnindex.OffsetIndex
+import org.apache.parquet.internal.filter2.columnindex.RowRanges
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, Type}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
 import org.apache.spark.sql.types.{MapType, StructType}
@@ -53,8 +59,9 @@ case class Entity(
   *
   * Design mapping (SURVEY.md §2.1):
   *  - keymap (key → address)         → [[Stash.KeyIndex]]: an opened
-  *    stash maps key → (data file, row group) from the files' `key`
-  *    column, and `get` reads that one row group on the driver, no job
+  *    stash maps key → (data file, row group, row) from the files' `key`
+  *    column, and `get` reads the pages that hold its row on the driver,
+  *    no job
   *  - hex-address fanout             → hash-bucketed files (`save`)
   *  - LazyField column-at-a-time I/O → Catalyst column pruning (free)
   *  - cache=True                     → Dataset.persist
@@ -187,7 +194,7 @@ object Stash {
     // Schema evolution: a stash written before an Entity field existed (e.g.
     // `longs`) must still open — backfill missing columns with empty maps so
     // the typed encoder never sees a null field.
-    var df = spark.read.parquet(path)
+    var df = footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
     entitySchema.foreach { f =>
       if (!df.columns.contains(f.name)) {
         val fill = f.dataType match {
@@ -200,10 +207,25 @@ object Stash {
     new Stash(df.as[Entity], Set.empty, Some(new KeyIndex(path, keymapBudget)))
   }
 
+  /** The schema Spark's inference reads when `mergeSchema` is off: the
+    * first data file's footer. Read on the driver, it spares `open` the
+    * inference job. `None` (infer) when `mergeSchema` is on, or `path` is
+    * not a flat directory of data files.
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      dataFiles(new Path(path), conf).flatMap(_.headOption).map { f =>
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f, new DataFile(f, conf).footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+    }
+
   private lazy val entityEncoder = ExpressionEncoder[Entity]()
   private def entitySchema: StructType = entityEncoder.schema
 
-  /** The keymap of an opened store: key → (data file, row group), read
+  /** The keymap of an opened store: key → (data file, row group, row), read
     * from the `key` column of the store directory's own parquet files on
     * the first `get` and rebuilt whenever the directory's
     * [[graft.Fingerprint]] moves. It lives as long as the stash that
@@ -222,50 +244,104 @@ object Stash {
     }
   }
 
-  private final class Keymap(
-      conf: Configuration,
-      groups: IndexedSeq[(Path, Int)],
-      at: mutable.HashMap[String, Int]) {
+  /** key → its row, packed as `group << 32 | row`: the index of its row
+    * group in `groups` and its row within that group.
+    */
+  private final class Keymap(groups: IndexedSeq[(DataFile, Int)], at: mutable.HashMap[String, Long]) {
     private val decode = entityEncoder.resolveAndBind().createDeserializer()
 
-    /** Reads the key's row group on the driver, filtered to `key = k`,
-      * through Spark's own parquet row converter and the Entity encoder.
+    /** Reads the pages that hold the key's row on the driver, filtered to
+      * `key = k`, through Spark's own parquet row converter and the Entity
+      * encoder.
       */
-    def get(key: String): Option[Entity] = at.get(key).flatMap { i =>
-      val (file, group) = groups(i)
-      val reader = Keymap.openFile(file, conf)
+    def get(key: String): Option[Entity] = at.get(key).flatMap { loc =>
+      val (file, group) = groups((loc >>> 32).toInt)
+      Option(file.read(group, loc.toInt, key)).map { row =>
+        // open's backfill, for the columns this file does not have
+        val fields = entitySchema.fields
+        decode(new GenericInternalRow(Array.tabulate[Any](fields.length) { j =>
+          val f = fields(j)
+          if (file.schema.containsField(f.name)) row.get(j, f.dataType)
+          else f.dataType match {
+            case _: MapType => new ArrayBasedMapData(
+              new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
+            case _ => null
+          }
+        }))
+      }
+    }
+  }
+
+  /** One parquet data file of a store: its footer, read once, and the read
+    * set-up its first hit makes, kept for the keymap's life.
+    */
+  private final class DataFile(path: Path, conf: Configuration) {
+    private val input = HadoopInputFile.fromPath(path, conf)
+    // read options from `conf`: the options' no-argument default loads a
+    // fresh Hadoop Configuration (~15 ms)
+    private val options = HadoopReadOptions.builder(conf, path).build()
+    val footer: ParquetMetadata = {
+      val r = ParquetFileReader.open(input, options)
+      try r.getFooter finally r.close()
+    }
+    def schema: MessageType = footer.getFileMetaData.getSchema
+
+    /** A reader over the footer above: no footer read. */
+    def open(): ParquetFileReader = new ParquetFileReader(input, footer, options, input.newStream())
+
+    // Row groups whose column chunks carry an offset index, so a read can
+    // take only the pages that hold one row. pyarrow's default writer
+    // writes none; those groups are read whole.
+    private val paged = footer.getBlocks.asScala
+      .map(_.getColumns.asScala.forall(_.getOffsetIndexReference != null)).toIndexedSeq
+
+    // One row converter for every hit on this file: safe only because
+    // KeyIndex.get, the one caller, is synchronized.
+    private lazy val (requested, columnIO, rows) = {
+      val meta = footer.getFileMetaData
+      val support = new ParquetReadSupport(None, false,
+        RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
+      val ctx = support.init(new InitContext(conf,
+        meta.getKeyValueMetaData.asScala.map { case (k, v) => k -> Set(v).asJava }.asJava,
+        meta.getSchema))
+      (ctx.getRequestedSchema,
+        new ColumnIOFactory(meta.getCreatedBy).getColumnIO(ctx.getRequestedSchema, meta.getSchema, true),
+        support.prepareForRead(conf, meta.getKeyValueMetaData, meta.getSchema, ctx))
+    }
+
+    /** Row `row` of row group `group` if its key is `key`, else null. The
+      * row converter's row: valid until the next read.
+      */
+    def read(group: Int, row: Int, key: String): InternalRow = {
+      val reader = open()
       try {
-        val meta = reader.getFooter.getFileMetaData
-        val fileSchema = meta.getSchema
-        val support = new ParquetReadSupport(None, false,
-          RebaseSpec(LegacyBehaviorPolicy.CORRECTED), RebaseSpec(LegacyBehaviorPolicy.CORRECTED))
-        val ctx = support.init(new InitContext(conf,
-          meta.getKeyValueMetaData.asScala.map { case (k, v) => k -> Set(v).asJava }.asJava,
-          fileSchema))
-        reader.setRequestedSchema(ctx.getRequestedSchema)
-        val pages = reader.readRowGroup(group)
-        val rows = new ColumnIOFactory(meta.getCreatedBy)
-          .getColumnIO(ctx.getRequestedSchema, fileSchema, true)
-          .getRecordReader(pages,
-            support.prepareForRead(conf, meta.getKeyValueMetaData, fileSchema, ctx),
-            // this filter skips the other columns of a non-matching row
-            // undecoded; the first matching row or null
-            FilterCompat.get(ColumnRecordFilter.column("key", ColumnPredicates.equalTo(key))))
-        Option(rows.read()).map { row =>
-          // open's backfill, for the columns this file does not have
-          val fields = entitySchema.fields
-          decode(new GenericInternalRow(Array.tabulate[Any](fields.length) { j =>
-            val f = fields(j)
-            if (fileSchema.containsField(f.name)) row.get(j, f.dataType)
-            else f.dataType match {
-              case _: MapType => new ArrayBasedMapData(
-                new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array.empty[Any]))
-              case _ => null
-            }
-          }))
-        }
+        reader.setRequestedSchema(requested)
+        val pages =
+          if (paged(group)) reader.readFilteredRowGroup(group, oneRow(group, row))
+          else reader.readRowGroup(group)
+        columnIO.getRecordReader(pages, rows,
+          // this filter skips the other columns of a non-matching row
+          // undecoded; the first matching row or null
+          FilterCompat.get(ColumnRecordFilter.column("key", ColumnPredicates.equalTo(key))))
+          .read()
       } finally reader.close()
     }
+
+    /** Row `row` alone, as row ranges. `RowRanges` has no public one-range
+      * constructor, so a one-page offset index whose first and last row are
+      * both `row` stands in for the file's own. Pages start on row
+      * boundaries wherever an offset index exists, so the read is exact for
+      * the nested map and array columns too.
+      */
+    private def oneRow(group: Int, row: Long): RowRanges =
+      RowRanges.create(footer.getBlocks.get(group).getRowCount, IntStream.of(0).iterator(),
+        new OffsetIndex {
+          def getPageCount: Int = 1
+          def getOffset(page: Int): Long = 0L
+          def getCompressedPageSize(page: Int): Int = 0
+          def getFirstRowIndex(page: Int): Long = row
+          override def getLastRowIndex(page: Int, rowGroupRowCount: Long): Long = row
+        })
   }
 
   private object Keymap {
@@ -282,41 +358,32 @@ object Stash {
         SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
         SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
         .foreach(e => conf.setBoolean(e.key, spark.sessionState.conf.getConf(e)))
-      val root = new Path(dir)
-      val fs = root.getFileSystem(conf)
-      if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return None
-      // Spark's own rule for the files a directory read skips
-      val listed = fs.listStatus(root).toSeq.filterNot { st =>
-        val n = st.getPath.getName
-        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+      val files = dataFiles(new Path(dir), conf) match {
+        case Some(ps) => ps.map(new DataFile(_, conf))
+        case None => return None
       }
-      if (listed.exists(_.isDirectory)) return None
-      val files = listed.map(_.getPath).sortBy(_.getName)
-      val footers = files.map { f =>
-        val r = openFile(f, conf)
-        try r.getFooter finally r.close()
-      }
-      val keyBytes = footers.map(keyColumnBytes)
+      val keyBytes = files.map(f => keyColumnBytes(f.footer))
       if (keyBytes.exists(_.isEmpty) || keyBytes.flatten.sum > budget) return None
-      val groups = mutable.ArrayBuffer.empty[(Path, Int)]
-      val at = mutable.HashMap.empty[String, Int]
+      val groups = mutable.ArrayBuffer.empty[(DataFile, Int)]
+      val at = mutable.HashMap.empty[String, Long]
       files.foreach { f =>
-        val r = openFile(f, conf)
+        val r = f.open()
         try {
-          val meta = r.getFooter.getFileMetaData
+          val meta = f.footer.getFileMetaData
           val keySchema = new MessageType(meta.getSchema.getName, keyField(meta.getSchema))
           val col = keySchema.getColumns.get(0)
           r.setRequestedSchema(keySchema)
-          r.getFooter.getBlocks.asScala.indices.foreach { g =>
+          f.footer.getBlocks.asScala.zipWithIndex.foreach { case (block, g) =>
             val pages = r.readRowGroup(g)
             val keys = new ColumnReadStoreImpl(pages,
               new GroupRecordConverter(keySchema).getRootConverter, keySchema, meta.getCreatedBy)
               .getColumnReader(col)
+            // `key` is a top-level non-repeated column: value n is row n
             var n = 0L
-            while (n < keys.getTotalValueCount) {
+            while (n < block.getRowCount) {
               // the first row group holding a key answers it, as a scan's limit(1) may
               if (keys.getCurrentDefinitionLevel == col.getMaxDefinitionLevel)
-                at.getOrElseUpdate(keys.getBinary.toStringUsingUTF8, groups.size)
+                at.getOrElseUpdate(keys.getBinary.toStringUsingUTF8, groups.size.toLong << 32 | n)
               keys.consume()
               n += 1
             }
@@ -324,15 +391,8 @@ object Stash {
           }
         } finally r.close()
       }
-      Some(new Keymap(conf, groups.toIndexedSeq, at))
+      Some(new Keymap(groups.toIndexedSeq, at))
     }
-
-    /** Opens a data file with read options from `conf`: the options'
-      * no-argument default loads a fresh Hadoop Configuration (~15 ms).
-      */
-    def openFile(f: Path, conf: Configuration): ParquetFileReader =
-      ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
-        HadoopReadOptions.builder(conf, f).build())
 
     private def keyField(s: MessageType): Type = s.getType(s.getFieldIndex("key"))
 
@@ -345,6 +405,21 @@ object Stash {
       else Some(m.getBlocks.asScala.iterator.flatMap(_.getColumns.asScala)
         .filter(_.getPath.toDotString == "key").map(_.getTotalUncompressedSize).sum)
     }
+  }
+
+  /** A directory's data files, sorted by name, by Spark's rule for the
+    * files a directory read skips; `None` when `root` is not a flat
+    * directory of files.
+    */
+  private def dataFiles(root: Path, conf: Configuration): Option[Seq[Path]] = {
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return None
+    val listed = fs.listStatus(root).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
+    if (listed.exists(_.isDirectory)) None
+    else Some(listed.map(_.getPath).sortBy(_.getName))
   }
 
   def fromEntities(spark: SparkSession, es: Seq[Entity]): Stash = {

@@ -191,11 +191,13 @@ class StashSpec extends SparkSpec {
 
   // ---- the keymap point read ----------------------------------------------
 
-  /** Entities with every field kind, some maps empty, some fields absent. */
-  private def mixed(n: Int, tag: Double = 0.0): Seq[Entity] = {
+  /** Entities with every field kind, some maps empty, some fields absent;
+    * tensor `x` holds 1 to `maxLen` doubles.
+    */
+  private def mixed(n: Int, tag: Double = 0.0, maxLen: Int = 40): Seq[Entity] = {
     val rng = new scala.util.Random(n)
     (1 to n).map { i =>
-      val len = 1 + rng.nextInt(40)
+      val len = 1 + rng.nextInt(maxLen)
       Entity(f"k$i%04d",
         tensors = if (i % 7 == 0) Map.empty
           else Map("x" -> Array.fill(len)(rng.nextGaussian() + tag), "y" -> Array(i.toDouble)),
@@ -248,6 +250,43 @@ class StashSpec extends SparkSpec {
 
   private def tmp(name: String) = Files.createTempDirectory(name).toString
 
+  /** Each row group of each data file under `dir`, in file and group order:
+    * (file, rows, compressed bytes, pages of the largest column chunk).
+    */
+  private def rowGroups(dir: String): Seq[(String, Long, Long, Int)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .toSeq.flatMap { f =>
+        val r = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+        try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+          (f.getAbsolutePath, b.getRowCount, b.getCompressedSize,
+            b.getColumns.asScala.map(c => r.readOffsetIndex(c).getPageCount).max)
+        } finally r.close()
+      }
+  }
+
+  /** A store past the first page and the first row group: two files of
+    * ~2k-double entities, written with small row groups and pages. The
+    * writer checks page and row group sizes every 100 rows by default, which
+    * would put each row group in one page; the row check minimum lowers it.
+    */
+  private lazy val pagedStore: String = {
+    import spark.implicits._
+    val dir = tmp("km-p") + "/st"
+    spark.createDataset(mixed(400, maxLen = 4000)).coalesce(2).write
+      .option("parquet.block.size", 1 << 20).option("parquet.page.size", 64 << 10)
+      .option("parquet.page.size.row.check.min", 4)
+      .parquet(dir)
+    val groups = rowGroups(dir)
+    groups.groupBy(_._1).values.foreach(g => assert(g.size >= 2, s"row groups per file: $groups"))
+    assert(groups.forall(_._4 >= 2), s"pages per row group: $groups")
+    dir
+  }
+
   test("keymap get equals the scan: bucketed, unbucketed, compacted, no-longs, pending removes") {
     import spark.implicits._
     val es = mixed(240)
@@ -274,6 +313,55 @@ class StashSpec extends SparkSpec {
     val o = Stash.open(spark, old)
     assert(o.get("k0001").get.longs.isEmpty)
     assertGetsMatchScan(o)
+
+    // rows past the first page of a column chunk and past a file's first row group
+    assertGetsMatchScan(Stash.open(spark, pagedStore))
+  }
+
+  test("a keymap hit reads less than half of its row group's bytes") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val groups = rowGroups(pagedStore)
+    val g = groups.indices.maxBy(groups(_)._3)
+    val (file, rows, bytes, _) = groups(g)
+    // the middle row of the largest row group, as a row index in its file
+    val at = groups.take(g).filter(_._1 == file).map(_._2).sum + rows / 2
+    val key = spark.read.parquet(file).select(col("key"), col("_metadata.row_index").as("i"))
+      .filter(col("i") === at).collect().head.getString(0)
+    // parquet-mr's vectored reads bypass the local file system's byte
+    // count; the plain reads that stand in for them read the same ranges
+    val vectored = "parquet.hadoop.vectored.io.enabled"
+    val prev = spark.conf.getOption(vectored)
+    spark.conf.set(vectored, "false")
+    try {
+      val st = Stash.open(spark, pagedStore)
+      assert(st.get(key).isDefined) // builds the keymap and the file's read set-up
+      def bytesRead = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+      val before = bytesRead
+      assert(st.get(key).isDefined)
+      val read = bytesRead - before
+      assert(read < bytes / 2, s"a hit read $read bytes of a $bytes-byte row group")
+      // a tensor page holds 64 KB or more, several rows' worth: the count sees it
+      assert(read > bytes / rows, s"a hit read $read bytes of a $bytes-byte row group")
+    } finally prev.fold(spark.conf.unset(vectored))(spark.conf.set(vectored, _))
+  }
+
+  test("a pyarrow-written store without an offset index: get equals the scan") {
+    // part-0.parquet: 120 entities p000..p119 in 4 row groups of 30, no page
+    // index (pyarrow 16.1's default writer), made from the repo root by
+    // python3 -c "import pyarrow as pa, pyarrow.parquet as pq; n=120; m=lambda v: pa.map_(pa.string(), v); pq.write_table(pa.table({'key': [f'p{i:03d}' for i in range(n)], 'tensors': pa.array([[('x', [i + j / 8 for j in range(i % 9)])] for i in range(n)], m(pa.list_(pa.float64()))), 'shapes': pa.array([[('x', [i % 9])] for i in range(n)], m(pa.list_(pa.int32()))), 'scalars': pa.array([[('s', i / 2)] for i in range(n)], m(pa.float64())), 'strings': pa.array([[('label', f'l-{i}')] if i % 3 else [] for i in range(n)], m(pa.string())), 'longs': pa.array([[('id', 2**62 + i)] for i in range(n)], m(pa.int64()))}), 'src/test/resources/kv/pyarrow-stash/part-0.parquet', row_group_size=30)"
+    val dir = getClass.getResource("/kv/pyarrow-stash").getPath
+    val st = Stash.open(spark, dir)
+    assert(st.count() == 120)
+    assert(st.get("p025").map(_.scalars("s")) === Some(12.5))
+    assertGetsMatchScan(st)
+  }
+
+  test("open reads the schema from a footer: no Spark job") {
+    val dir = tmp("km-open") + "/st"
+    Stash.fromEntities(spark, mixed(20)).save(dir, buckets = 2)
+    assert(jobsDuring(Stash.open(spark, dir)) === 0)
   }
 
   test("get on an opened store starts no Spark job; over the keymap budget it scans") {
