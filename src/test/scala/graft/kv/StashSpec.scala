@@ -343,7 +343,7 @@ class StashSpec extends SparkSpec {
       val read = bytesRead - before
       assert(read < bytes / 2, s"a hit read $read bytes of a $bytes-byte row group")
       // a tensor page holds 64 KB or more, several rows' worth: the count sees it
-      assert(read > bytes / rows, s"a hit read $read bytes of a $bytes-byte row group")
+      assert(read > bytes / rows, s"a hit counted $read bytes, less than one row's share")
     } finally prev.fold(spark.conf.unset(vectored))(spark.conf.set(vectored, _))
   }
 
